@@ -80,8 +80,13 @@ def llm_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Distributed shape: bigram explode is map-only; the per-row bigram and
     unigram counts ride window aggregates over the exploded relation; only
     the 1-row vocab aggregate keeps its own branch and broadcasts. At
-    100 TB no stage holds the corpus and the count skew (hot stopword
-    pairs) colocates exactly as the old count-table join's shuffle did.
+    100 TB no stage holds the corpus. The count skew (hot stopword pairs)
+    colocates as the old count-table join's shuffle did only in that
+    plan's sort-merge-join regime (count tables past the broadcast
+    threshold). Where the old plan broadcast its count tables, hot-w1 rows
+    stayed spread over partitions; the window plan always puts every row
+    of a hot stopword w1 in one window group (spill-bounded, but a
+    single-partition hot spot the broadcast path did not have).
     Determinism: the ln() values average in arbitrary order but rounding
     to 4 decimals absorbs the ~1e-13 float reassociation noise.
 

@@ -225,8 +225,10 @@ def llm_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-scoring token per document — the keyword-extraction /
     vocabulary-pruning primitive. Fully SQL-expressible, so unlike
     ml.feature.HashingTF (hash-bucketed, impl-specific) every value is
-    oracle-verified. Two shuffles (tf by (doc,token), then by token); the
-    1-row N aggregate broadcasts.
+    oracle-verified. Two shuffles (tf by (doc,token), then by token). The
+    corpus size N is NOT a plan node: ``d.count()`` runs eagerly while the
+    DataFrame is built (2 jobs at build time) and enters the plan as a
+    literal.
 
     r14 (guide §2.4): through r13 df was a second explode of the corpus
     into a groupBy(token) countDistinct(doc_id) — which internally

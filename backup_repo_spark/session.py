@@ -65,8 +65,8 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        # events.parquet is TIMESTAMP(NANOS); Spark 4.x needs this to read it
-        # (FIXTURES.md gotcha #1). Also set defensively in load_events().
+        # a TIMESTAMP(NANOS) events file needs this for Spark 4.x to read it
+        # (FIXTURES.md timestamp-unit gotcha; the testdata holds MICROS).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", str(adaptive).lower())
@@ -91,7 +91,6 @@ def get_spark(
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
@@ -143,18 +142,18 @@ def _load_events_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet with ``ts`` normalized to TimestampType (microsecond
     precision — Spark's native resolution), whatever the session reads it as.
 
-    The file stores TIMESTAMP(NANOS). How Spark 4.1.2 surfaces that depends
-    on session-BUILD-time config (verified by execution, round 2):
+    The testdata files store ``timestamp[us]`` (not UTC-adjusted), which
+    every session reads as TIMESTAMP_NTZ: cast NTZ → TIMESTAMP under UTC
+    session tz, which preserves the wall-clock. A ``timestamp[ns]`` file
+    surfaces by session-BUILD-time config (verified by execution):
 
     - ``spark.sql.legacy.parquet.nanosAsLong=true`` at builder time (our own
       ``get_spark``) → ``ts`` arrives as BIGINT nanos. ``ts DIV 1000``
       (integer division) avoids the double-precision round-trip a ``/``
-      would introduce at ~1.7e18 ns magnitudes.
-    - a bare session (the driver's) → ``ts`` arrives as TIMESTAMP_NTZ,
-      already micro-truncated; setting the legacy conf at runtime has NO
-      effect on the read schema. Cast NTZ → TIMESTAMP under UTC session tz,
-      which preserves the wall-clock and lands on the same instants as the
-      bigint path.
+      would introduce at ~1.7e18 ns magnitudes; same instants as the cast.
+    - a vanilla session (no engine configs) → TIMESTAMP_NTZ, already
+      micro-truncated; setting the legacy conf at runtime has NO effect on
+      the read schema.
 
     So: branch on the dtype actually read, never assume one session shape.
     """

@@ -1,66 +1,50 @@
-"""Custom connector: the "astro_layout" Python DataSource.
+"""Custom connector: the "astro_layout" Python DataSource, and the range
+layout Astro's key-range reads are served from.
 
-Reference parity — this module is the engine's explicit restatement of the
-reference's connector architecture (SURVEY.md §2.A/§4.2, upstream
-``HBaseRelation`` / ``HBaseSQLTableScan`` / ``ScanPredClassifier`` /
-``HBaseCriticalPoint``, unverified — reference snapshot empty):
+Reference parity — the engine's restatement of the reference's connector
+architecture (SURVEY.md §2.A/§4.2, upstream ``HBaseRelation`` /
+``HBaseSQLTableScan`` / ``ScanPredClassifier`` / ``HBaseCriticalPoint``,
+unverified — reference snapshot empty):
 
-- **Region-aligned layout** → ``ensure_range_layout()`` writes a table as N
-  range-partitioned, key-sorted parquet files (N "regions" with known
-  [min,max] key bounds in the footer stats).
-- **Scan with partition planning** → ``partitions()`` returns one input
-  partition per (file, row-group) — the unit of parallelism, like one scan
-  per HBase region.
-- **Predicate classification + pushdown** → ``pushFilters()`` splits
-  Spark's filters into source-handled vs residual (Astro's
-  ScanPredClassifier), translating the handled ones to pyarrow compute
-  expressions (Astro's HBase Filter trees).
-- **Critical-point range pruning** → ``partitions()`` evaluates the pushed
-  predicates against per-row-group min/max footer statistics and drops
-  row groups that cannot match (Astro's rowkey-range region pruning).
+- **Region-aligned layout** → ``ensure_range_layout()`` bulk-loads a table
+  once into the layout catalog (``sources/catalog.py``) as N
+  range-partitioned, key-sorted parquet files: N "regions" whose footers
+  carry each row group's [min,max] key bounds.
+- **Predicate classification, pushdown and critical-point range pruning**
+  → Spark's native parquet scan of that layout: key-range predicates show
+  as ``PushedFilters`` and each task skips the row groups whose min/max
+  stats cannot match (SURVEY.md's design for A2/A3, asserted in
+  tests/test_plans.py).
+- **Bulk-load write path** → ``AstroLayoutArrowWriter``: task-staged
+  files published by one driver-side commit.
+- **Streaming source and sink** → ``AstroStreamReader`` (replayable row
+  offsets) and ``AstroStreamWriter`` (per-batch atomic publish).
 
-Everything Spark-side stays declarative: the DataFrame plan over this source
-gets Catalyst's column pruning and the pushed filters are *also* applied
-exactly inside ``read()`` (row-group stats only skip work; they never decide
-correctness).
-
-Scale notes (100 TB): partition granularity is the parquet row group
-(~128 MB), so a 100 TB table yields ~800k independent scan tasks; pruning is
-metadata-only (footer reads, no data IO) and happens at plan time on the
-driver, exactly like region pruning. The Python worker decodes only the
-row groups it owns and streams Arrow batches to the JVM.
+Scale notes (100 TB): a 100 TB table is ~800k row groups of ~128 MB. The
+native scan skips them inside each task from the footer it already reads,
+so the driver never walks 800k footers at plan time, and a batch read pays
+no Python DataSource planning or worker round-trip.
 """
 
 from __future__ import annotations
 
 import os
 from dataclasses import dataclass
-from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
-    DataSourceReader,
     DataSourceStreamWriter,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
-    InputPartition,
-    IsNotNull,
-    LessThan,
-    LessThanOrEqual,
     SimpleDataSourceStreamReader,
-    StringStartsWith,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
 
 from backup_repo_spark.registry import query
 from backup_repo_spark.session import load_table
+from backup_repo_spark.sources.catalog import LayoutSpec, ensure_layout, read_layout
 
 FORMAT_NAME = "astro_layout"
 
@@ -87,125 +71,6 @@ def _target_arrow_schema(schema):
             t = pa.timestamp("us", tz=t.tz)
         fields.append(pa.field(f.name, t, f.nullable))
     return pa.schema(fields)
-
-
-@dataclass
-class RowGroupPartition(InputPartition):
-    """One scan task = one parquet row group of one file (the 'region')."""
-
-    path: str
-    row_group: int
-
-
-class AstroLayoutReader(DataSourceReader):
-    def __init__(self, options: dict) -> None:
-        path = options.get("path")
-        if not path:
-            raise ValueError("astro_layout requires .option('path', <dir-or-file>)")
-        self._files = _list_parquet_files(path)
-        if not self._files:
-            raise ValueError(f"astro_layout: no parquet files under {path}")
-        self._pushed: list[Filter] = []
-
-    # -- predicate classification (ScanPredClassifier analog) ---------------
-    _RANGE_TYPES = (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, In)
-    _SUPPORTED = _RANGE_TYPES + (IsNotNull, StringStartsWith)
-
-    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        for f in filters:
-            if isinstance(f, self._SUPPORTED) and len(f.attribute) == 1:
-                self._pushed.append(f)
-            else:
-                yield f  # residual: Spark evaluates it above the scan
-
-    # -- partition planning with stats pruning (critical-point analog) ------
-    def partitions(self) -> list[RowGroupPartition]:
-        import pyarrow.parquet as pq
-
-        parts: list[RowGroupPartition] = []
-        for path in self._files:
-            md = pq.ParquetFile(path).metadata
-            names = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            for rg in range(md.num_row_groups):
-                stats = {}
-                for name, ci in names.items():
-                    s = md.row_group(rg).column(ci).statistics
-                    if s is not None and s.has_min_max:
-                        stats[name] = (s.min, s.max)
-                if all(self._rg_may_match(f, stats) for f in self._pushed):
-                    parts.append(RowGroupPartition(path, rg))
-        # Every row group pruned → still need ≥1 partition for an empty scan.
-        return parts or [RowGroupPartition(self._files[0], -1)]
-
-    @staticmethod
-    def _rg_may_match(f: Filter, stats: dict) -> bool:
-        """Interval evaluation of one pushed predicate against [min,max]
-        footer stats. Conservative: unknown stats or types → True."""
-        col = f.attribute[0]
-        if col not in stats:
-            return True
-        lo, hi = stats[col]
-        try:
-            if isinstance(f, EqualTo):
-                return lo <= f.value <= hi
-            if isinstance(f, GreaterThan):
-                return hi > f.value
-            if isinstance(f, GreaterThanOrEqual):
-                return hi >= f.value
-            if isinstance(f, LessThan):
-                return lo < f.value
-            if isinstance(f, LessThanOrEqual):
-                return lo <= f.value
-            if isinstance(f, In):
-                return any(lo <= v <= hi for v in f.value)
-        except TypeError:
-            return True
-        return True
-
-    # -- scan execution ------------------------------------------------------
-    def read(self, partition: RowGroupPartition):
-        import pyarrow.dataset as ds
-        import pyarrow.parquet as pq
-
-        pf = pq.ParquetFile(partition.path)
-        target = _target_arrow_schema(pf.schema_arrow)
-        if partition.row_group < 0:
-            yield from target.empty_table().to_batches()
-            return
-        table = pf.read_row_group(partition.row_group)
-        expr = self._arrow_filter_expr(ds)
-        if expr is not None:
-            table = table.filter(expr)
-        yield from table.cast(target).to_batches()
-
-    def _arrow_filter_expr(self, ds):
-        """Pushed filters → one ANDed pyarrow compute expression (the exact
-        evaluation; stats pruning above is only an accelerator)."""
-        import pyarrow.compute as pc
-
-        expr = None
-        for f in self._pushed:
-            field = ds.field(f.attribute[0])
-            if isinstance(f, EqualTo):
-                e = field == f.value
-            elif isinstance(f, GreaterThan):
-                e = field > f.value
-            elif isinstance(f, GreaterThanOrEqual):
-                e = field >= f.value
-            elif isinstance(f, LessThan):
-                e = field < f.value
-            elif isinstance(f, LessThanOrEqual):
-                e = field <= f.value
-            elif isinstance(f, In):
-                e = field.isin(list(f.value))
-            elif isinstance(f, IsNotNull):
-                e = field.is_valid()
-            elif isinstance(f, StringStartsWith):
-                e = pc.starts_with(field, f.value)
-            else:  # pragma: no cover — pushFilters only admits the above
-                continue
-            expr = e if expr is None else expr & e
-        return expr
 
 
 @dataclass
@@ -313,9 +178,9 @@ class AstroStreamReader(SimpleDataSourceStreamReader):
     micro-batches of ``batch_rows`` rows. Offsets are plain row positions
     ({"row": N}) — monotonic, checkpointable, and replayable:
     ``readBetweenOffsets`` re-produces any committed range exactly, which
-    is what gives a restarted query exactly-once output. The streaming
-    analog of the batch reader's region scan: at scale the offset would be
-    a (file, row-group) cursor over an append-only table, same protocol."""
+    is what gives a restarted query exactly-once output. At scale the offset
+    would be a (file, row-group) cursor over an append-only table, same
+    protocol."""
 
     def __init__(self, options: dict) -> None:
         path = options.get("path")
@@ -351,9 +216,10 @@ class AstroStreamReader(SimpleDataSourceStreamReader):
 
 
 class AstroLayoutDataSource(DataSource):
-    """``spark.read.format("astro_layout").option("path", p).load()`` /
-    ``df.write.format("astro_layout").option("path", p).save()`` /
-    ``spark.readStream.format("astro_layout").option("path", f).load()``."""
+    """``df.write.format("astro_layout").option("path", p).save()`` /
+    ``spark.readStream.format("astro_layout").option("path", f).load()``
+    (``schema`` serves the stream source). Batch reads of what it writes
+    go through ``spark.read.parquet``."""
 
     @classmethod
     def name(cls) -> str:
@@ -366,9 +232,6 @@ class AstroLayoutDataSource(DataSource):
 
         first = _list_parquet_files(self.options["path"])[0]
         return from_arrow_schema(_target_arrow_schema(pq.ParquetFile(first).schema_arrow))
-
-    def reader(self, schema: StructType) -> AstroLayoutReader:
-        return AstroLayoutReader(dict(self.options))
 
     def writer(self, schema: StructType, overwrite: bool) -> AstroLayoutArrowWriter:
         path = self.options.get("path")
@@ -389,32 +252,16 @@ class AstroLayoutDataSource(DataSource):
 
 
 def register(spark: SparkSession) -> None:
-    # Runtime-settable; required or Spark refuses a reader with pushFilters().
-    # Set here (not only in session.py) because the driver may hand us a
-    # vanilla session.
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(AstroLayoutDataSource)
 
 
 _REPO_ROOT = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
-_N_RANGES = 8
 
 
 def ensure_range_layout(spark: SparkSession, sf_dir: str, table: str, key: str) -> str:
-    """Write ``table`` as N range-partitioned, key-sorted parquet files (the
-    bulkload/region layout, A6) — idempotent per (sf, table)."""
-    out = os.path.join(
-        _REPO_ROOT, "spark-warehouse", f"astro_layout_{os.path.basename(sf_dir)}_{table}"
-    )
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, table)
-            .repartitionByRange(_N_RANGES, key)
-            .sortWithinPartitions(key)
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-    return out
+    """``table`` as 8 range-partitioned parquet files sorted by ``key`` (the
+    bulkload/region layout, A6), built once per input by the layout catalog."""
+    return ensure_layout(spark, sf_dir, table, LayoutSpec(range_by=key))
 
 
 @query(
@@ -427,14 +274,12 @@ def ensure_range_layout(spark: SparkSession, sf_dir: str, table: str, key: str) 
     """,
 )
 def dsv2_scan_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full connector path: range-layout write → astro_layout scan with the
-    key-range + quantity predicates pushed into the source (pruning ~7/8
-    range files via footer stats, exact pyarrow filtering inside read()) →
-    aggregate. Oracle is the plain scan — the connector must be invisible
-    to results."""
-    layout = ensure_range_layout(spark, sf_dir, "lineitem", "l_orderkey")
-    register(spark)
-    li = spark.read.format(FORMAT_NAME).option("path", layout).load()
+    """Astro's key-range read: the catalog's range layout of lineitem,
+    scanned natively with the key-range and quantity predicates pushed into
+    the parquet reader, which skips the row groups whose footer min/max
+    miss [1000, 3000) (~5/8 of them) → aggregate. Oracle is the plain scan —
+    the layout must be invisible to results."""
+    li = read_layout(spark, sf_dir, "lineitem", LayoutSpec(range_by="l_orderkey"))
     return (
         li.filter(
             (F.col("l_orderkey") >= 1000)
@@ -458,9 +303,9 @@ def dsv2_scan_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dsv2_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connector write path: a filtered orders slice goes OUT through the
     astro_layout Arrow writer (task-staged files, driver-side atomic commit)
-    and comes back IN through the pushdown reader; the aggregate must match
-    the original table. Write+read through the same custom source is the
-    DDL/bulkload/scan round-trip of the reference in one query."""
+    and comes back IN through the native parquet scan; the aggregate must
+    match the original table. The DDL/bulkload/scan round-trip of the
+    reference in one query."""
     register(spark)
     out = os.path.join(_REPO_ROOT, "spark-warehouse", f"astro_write_roundtrip-{os.getpid()}")
     (
@@ -472,7 +317,7 @@ def dsv2_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mode("overwrite")
         .save()
     )
-    back = spark.read.format(FORMAT_NAME).option("path", out).load()
+    back = spark.read.parquet(out)
     return (
         back.groupBy("o_orderstatus")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("o_totalprice"), 2).alias("total"))
@@ -548,9 +393,9 @@ def dsv2_stream_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed as micro-batches by AstroStreamReader, landed by
     AstroStreamWriter (task-staged files, per-batch atomic publish), then
     read back from the landed files — the aggregate must equal the batch
-    table. With dsv2_scan_pushdown / dsv2_write_roundtrip /
-    dsv2_stream_read this completes all four connector planes (batch+stream
-    x read+write), the full Astro-connector parity matrix."""
+    table. With dsv2_scan_pushdown (native scan of the range layout) /
+    dsv2_write_roundtrip / dsv2_stream_read this covers all four connector
+    planes (batch+stream x read+write), the Astro-connector parity matrix."""
     import shutil
     import tempfile
     import uuid

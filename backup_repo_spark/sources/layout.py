@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 
 from backup_repo_spark.registry import query
 from backup_repo_spark.session import load_table
+from backup_repo_spark.sources.catalog import LayoutSpec, read_layout
 
 
 def _tmpdir(tag: str) -> str:
@@ -76,12 +77,9 @@ def partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3: Astro's critical-point rowkey-range pruning, reproduced by layout:
     a scan of a status-partitioned table with a status predicate reads ONE
     partition directory (explain() shows it as a PartitionFilter, asserted in
-    tests/test_plans.py)."""
-    out = _tmpdir("prune")
-    load_table(spark, sf_dir, "orders").write.mode("overwrite").partitionBy(
-        "o_orderstatus"
-    ).parquet(out)
-    back = spark.read.parquet(out).filter(F.col("o_orderstatus") == "O")
+    tests/test_plans.py). The layout is built once by the layout catalog."""
+    orders = read_layout(spark, sf_dir, "orders", LayoutSpec(partition_by="o_orderstatus"))
+    back = orders.filter(F.col("o_orderstatus") == "O")
     return (
         back.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n")).orderBy("o_orderpriority")
     )
@@ -108,16 +106,13 @@ def dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     RUNTIME (asserted in tests/test_plans.py). At 100 TB this is the
     difference between scanning 3 month-partitions and scanning 84 —
     star-schema queries filter on dim attributes, not on fact partition
-    keys, so static pruning never fires for them."""
-    out = _tmpdir("dpp")
-    li = load_table(spark, sf_dir, "lineitem")
-    fact = li.select(
-        "l_orderkey",
-        "l_extendedprice",
-        F.date_format("l_shipdate", "yyyy-MM").alias("ship_month"),
+    keys, so static pruning never fires for them. The month-partitioned fact
+    layout is built once by the layout catalog."""
+    select = ("l_orderkey", "l_extendedprice", "date_format(l_shipdate, 'yyyy-MM') AS ship_month")
+    fact_back = read_layout(
+        spark, sf_dir, "lineitem", LayoutSpec(select=select, partition_by="ship_month")
     )
-    fact.write.mode("overwrite").partitionBy("ship_month").parquet(out)
-    fact_back = spark.read.parquet(out)
+    fact = load_table(spark, sf_dir, "lineitem").selectExpr(*select)
     # Month-dimension with a derived quarter attribute; the filter lives on
     # the dim attribute, NOT on the fact partition column.
     dim = (

@@ -9,8 +9,8 @@ the branch-heavy events/timeseries/window keys through the driver's
 Spark-vs-DuckDB comparison. Divergence = a real tie-break or boundary
 semantics gap between the engine query and its oracle.
 
-Note the staged file stores TIMESTAMP(MICROS) — unlike the testdata's
-TIMESTAMP(NANOS) — so this also exercises the batch loader's µs branch.
+The staged file stores TIMESTAMP(MICROS), like the testdata; the loader's
+TIMESTAMP(NANOS) branch has its own test below.
 """
 
 from __future__ import annotations
@@ -141,3 +141,42 @@ def test_events_key_on_adversarial_events(name, spark, adv_ev_dir, adv_ev_duck):
     duck_pdf = adv_ev_duck.execute(registry.ORACLES[name]).fetchdf()
     problems = hard_problems(compare(spark_pdf, duck_pdf))
     assert not problems, f"{name} diverges on adversarial events: {problems}"
+
+
+def test_nanos_events_file_takes_the_bigint_branch(spark, tmp_path):
+    """A ``timestamp[ns]`` events file reads as bigint nanos in the engine's
+    session (``nanosAsLong`` at build time), so ``load_table`` takes its
+    ``timestamp_micros(ts DIV 1000)`` branch; it must land on the same
+    instants as the ``timestamp[us]`` file (the testdata's unit)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from backup_repo_spark.session import load_table
+
+    rows = _mk_events()
+    ts = [r[1] for r in rows]
+    for unit in ("us", "ns"):
+        d = tmp_path / unit
+        d.mkdir()
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array([r[0] for r in rows], pa.int64()),
+                    "ts": pa.array(ts, pa.timestamp(unit)),
+                }
+            ),
+            str(d / "events.parquet"),
+        )
+    ns_raw = spark.read.parquet(str(tmp_path / "ns" / "events.parquet"))
+    assert dict(ns_raw.dtypes)["ts"] == "bigint"
+
+    def instants(unit):
+        df = load_table(spark, str(tmp_path / unit), "events")
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        return df.selectExpr("event_id", "unix_micros(ts) AS us").orderBy("event_id").collect()
+
+    got = instants("ns")
+    assert got == instants("us")
+    assert [r.us for r in got] == [
+        int((t - datetime(1970, 1, 1)) / timedelta(microseconds=1)) for t in ts
+    ]

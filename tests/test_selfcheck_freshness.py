@@ -18,7 +18,17 @@ import subprocess
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _last_commit_ts(path: str) -> int:
+def _last_commit_ts(path: str) -> float:
+    """Time of the newest change to ``path``. A path with staged,
+    unstaged or untracked changes counts as newer than every commit: it
+    will land in the next one, so a record regenerated alongside pending
+    engine edits is fresh, and pending engine edits without a
+    regenerated record are not."""
+    pending = subprocess.check_output(
+        ["git", "status", "--porcelain", "--", path], cwd=_REPO
+    ).strip()
+    if pending:
+        return float("inf")
     out = subprocess.check_output(
         ["git", "log", "-1", "--format=%ct", "--", path], cwd=_REPO
     ).strip()
