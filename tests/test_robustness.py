@@ -44,7 +44,8 @@ def test_bad_sf_dir_fails_cleanly(spark):
 
 
 def test_session_codec_defaults(spark):
-    """r13 codec pass (tools/codec_probe.py): parquet writes default to
+    """r13 codec pass (the retired codec_probe, README "Retired probes";
+    OPTIMIZATION_r13.md §3): parquet writes default to
     zstd (strictly better locally: lineitem sf0.1 10.26 -> 8.24 MB, no
     scan penalty); the shuffle codec stays at Spark's lz4 default
     locally (zstd halves shuffle bytes but costs ~+14% executor CPU —

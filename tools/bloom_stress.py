@@ -12,29 +12,16 @@ the dim filter's selectivity (o_orderpriority = '1-URGENT' keeps ~20%).
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from tools.spark_rest import rest
 
-_UI_PORT = 4049
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def _rest(spark: SparkSession, path: str):
-    # Read the BOUND port from the context: if _UI_PORT is occupied Spark
-    # silently binds the next free port, and a hardcoded URL would 404
-    # every call (ADVICE r3).
-    app_id = spark.sparkContext.applicationId
-    base = spark.sparkContext.uiWebUrl or f"http://localhost:{_UI_PORT}"
-    url = f"{base}/api/v1/applications/{app_id}{path}"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        return json.load(r)
 
 
 def _run(spark: SparkSession, bloom: bool) -> dict:
@@ -51,7 +38,7 @@ def _run(spark: SparkSession, bloom: bool) -> dict:
         F.col("o_orderpriority") == "1-URGENT"
     )
     before = max(
-        (st["stageId"] for st in _rest(spark, "/stages")), default=-1
+        (st["stageId"] for st in rest(spark, "/stages")), default=-1
     )
     rows = (
         li.join(o, li.l_orderkey == o.o_orderkey)
@@ -61,7 +48,7 @@ def _run(spark: SparkSession, bloom: bool) -> dict:
     )
     stages = [
         st
-        for st in _rest(spark, "/stages?status=complete")
+        for st in rest(spark, "/stages?status=complete")
         if st["stageId"] > before
     ]
     return {
@@ -78,7 +65,6 @@ def main() -> None:
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
         .appName("bloom-stress")
         .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(_UI_PORT))
         .config("spark.sql.shuffle.partitions", "32")
         .getOrCreate()
     )

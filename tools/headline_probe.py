@@ -1,50 +1,26 @@
-"""Round-14 optimization probe (guide §1.1/§2.2/§6): where do the six
-headline bench queries actually spend their sub-second wall time, and is
-leaf-scan split count (``spark.sql.files.minPartitionNum`` defaulting to
-defaultParallelism = the core count) part of it?
+"""Where do the six headline bench queries spend their sub-second wall
+time? One bench-profile session with the UI on runs each headline query
+once warm and once measured, and prints one JSON line per query: wall,
+job count, task count, total task time and per-stage runtimes, read from
+the UI REST API (``/jobs`` and ``/stages``).
 
-Motivation (BENCH_r13 vs BENCH_r13_c8): the identical suite reads FASTER
-at 8 cores (2.372 s) than at 32 (2.975 s). The data files at sf0.1 are
-~1-10 MB each, far under one 128 MB split, so the only reason a scan has
-more than a couple of tasks is the ``minPartitionNum`` floor — which is
-``defaultParallelism`` (the core count) by default. At 32 cores every
-scan fans out to 32 tiny tasks whose per-task overhead is pure loss; at
-production scale the byte-derived split count dwarfs any core floor, so
-pinning the floor to 1 is scale-neutral by construction (the guide §6
-lever, applied in reverse: the floor exists for small-but-expensive
-inputs, which these scans are not).
-
-Two modes:
-
-``--diag``: one bench-profile session with the UI on; runs each headline
-query once warm + once measured and prints per-query job count, task
-count, total task time, scheduler-delay share (REST /jobs + /stages).
-
-A/B (default): ``spark.sql.files.*`` are runtime-settable SQL confs, so
-variants interleave WITHIN one session — per round, each variant runs the
-whole suite once (fresh DataFrame per query, collect sink, bench
-methodology); report = per-variant suite/per-query medians.
-
-    python tools/headline_probe.py [--rounds 5] [--diag]
+    SPARK_GRAFT_SF_DIR=<sf dir> python tools/headline_probe.py
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
-import statistics
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
 from backup_repo_spark import registry  # noqa: E402
-
-_UI_PORT = 4048
+from backup_repo_spark.session import DEFAULT_SF_DIR  # noqa: E402
+from tools.spark_rest import rest  # noqa: E402
 
 BENCH_QUERIES = {
     "q_agg_lineitem": "agg_tpch_q1",
@@ -55,15 +31,8 @@ BENCH_QUERIES = {
     "q_distinct_users": "agg_distinct",
 }
 
-# Variant -> runtime conf overrides (None = session default, i.e. the
-# shipped bench profile where minPartitionNum floor = defaultParallelism).
-VARIANTS: dict[str, dict[str, str]] = {
-    "A_default": {},
-    "B_minpart1": {"spark.sql.files.minPartitionNum": "1"},
-}
 
-
-def _spark(ui: bool) -> SparkSession:
+def _spark() -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     b = (
         SparkSession.builder.appName("headline-probe")
@@ -74,31 +43,24 @@ def _spark(ui: bool) -> SparkSession:
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", str(ui).lower())
-        .config("spark.ui.port", str(_UI_PORT))
+        .config("spark.ui.enabled", "true")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
     return b.getOrCreate()
 
 
-def _rest(path: str):
-    with urllib.request.urlopen(f"http://localhost:{_UI_PORT}/api/v1/{path}") as r:
-        return json.loads(r.read())
-
-
 def diag(sf_dir: str) -> None:
-    spark = _spark(ui=True)
-    app = _rest("applications")[0]["id"]
+    spark = _spark()
     for metric, key in BENCH_QUERIES.items():
         fn = registry.QUERIES[key]
         fn(spark, sf_dir).collect()  # warm
-        jobs_before = {j["jobId"] for j in _rest(f"applications/{app}/jobs")}
+        jobs_before = {j["jobId"] for j in rest(spark, "/jobs")}
         t0 = time.perf_counter()
         fn(spark, sf_dir).collect()
         wall = time.perf_counter() - t0
         jobs = [
-            j for j in _rest(f"applications/{app}/jobs") if j["jobId"] not in jobs_before
+            j for j in rest(spark, "/jobs") if j["jobId"] not in jobs_before
         ]
         stage_ids = sorted({s for j in jobs for s in j["stageIds"]})
         n_tasks = 0
@@ -107,7 +69,7 @@ def diag(sf_dir: str) -> None:
         stages = []
         for sid in stage_ids:
             try:
-                st = _rest(f"applications/{app}/stages/{sid}")[0]
+                st = rest(spark, f"/stages/{sid}")[0]
             except Exception:
                 continue
             n_tasks += st["numCompleteTasks"]
@@ -136,70 +98,8 @@ def diag(sf_dir: str) -> None:
     spark.stop()
 
 
-def ab(sf_dir: str, rounds: int) -> None:
-    spark = _spark(ui=False)
-    defaults = {
-        k: spark.conf.get(k, None)
-        for v in VARIANTS.values()
-        for k in v
-    }
-
-    def _apply(conf: dict[str, str]) -> None:
-        for k, dflt in defaults.items():
-            if k in conf:
-                spark.conf.set(k, conf[k])
-            elif dflt is not None:
-                spark.conf.set(k, dflt)
-            else:
-                spark.conf.unset(k)
-
-    # Warm pass per variant (untimed).
-    for conf in VARIANTS.values():
-        _apply(conf)
-        for key in BENCH_QUERIES.values():
-            registry.QUERIES[key](spark, sf_dir).collect()
-
-    suite: dict[str, list[float]] = {v: [] for v in VARIANTS}
-    perq: dict[str, dict[str, list[float]]] = {
-        v: {m: [] for m in BENCH_QUERIES} for v in VARIANTS
-    }
-    for _ in range(rounds):
-        for variant, conf in VARIANTS.items():
-            _apply(conf)
-            total = 0.0
-            for metric, key in BENCH_QUERIES.items():
-                fn = registry.QUERIES[key]
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).collect()
-                dt = time.perf_counter() - t0
-                perq[variant][metric].append(dt)
-                total += dt
-            suite[variant].append(round(total, 3))
-    out = {
-        "metric": "headline_scan_split_ab",
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
-        "rounds": rounds,
-        "suite_runs": suite,
-        "suite_median": {v: round(statistics.median(r), 3) for v, r in suite.items()},
-        "per_query_median": {
-            v: {m: round(statistics.median(t), 3) for m, t in q.items()}
-            for v, q in perq.items()
-        },
-    }
-    print(json.dumps(out))
-    spark.stop()
-
-
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--rounds", type=int, default=5)
-    ap.add_argument("--diag", action="store_true")
-    args = ap.parse_args()
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if args.diag:
-        diag(sf_dir)
-    else:
-        ab(sf_dir, args.rounds)
+    diag(DEFAULT_SF_DIR)
 
 
 if __name__ == "__main__":

@@ -23,34 +23,25 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 from backup_repo_spark.operators.prefix import ntile_nosort  # noqa: E402
-
-
-def _rest(spark: SparkSession, path: str):
-    app_id = spark.sparkContext.applicationId
-    base = spark.sparkContext.uiWebUrl
-    with urllib.request.urlopen(
-        f"{base}/api/v1/applications/{app_id}{path}", timeout=30
-    ) as r:
-        return json.load(r)
+from tools.spark_rest import rest  # noqa: E402
 
 
 def _max_reduce_stage(spark: SparkSession, since: int) -> dict:
     stages = [
         s
-        for s in _rest(spark, "/stages?status=complete")
+        for s in rest(spark, "/stages?status=complete")
         if s["stageId"] > since and s["numCompleteTasks"] > 1
     ]
     best = {}
     for s in stages:
         try:
-            q = _rest(
+            q = rest(
                 spark,
                 f"/stages/{s['stageId']}/{s['attemptId']}/taskSummary"
                 "?quantiles=0.5,1.0",
@@ -93,7 +84,7 @@ def main() -> None:
     out = {}
     results = {}
     for label, tie_w in (("no_tie_bucket", None), ("tie_bucket_16k", 1 << 14)):
-        since = max((s["stageId"] for s in _rest(spark, "/stages")), default=-1)
+        since = max((s["stageId"] for s in rest(spark, "/stages")), default=-1)
         t0 = time.perf_counter()
         binned = ntile_nosort(
             df, "v", "tie", tiles=10, bucket_width=4, tie_bucket_width=tie_w

@@ -34,14 +34,14 @@ import os
 import shutil
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
+from tools.spark_rest import rest  # noqa: E402
+
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_UI_PORT = 4049
 
 
 def build_spark(adaptive: bool) -> SparkSession:
@@ -51,8 +51,6 @@ def build_spark(adaptive: bool) -> SparkSession:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
-        # SparkContext teardown is async; give the port back
-        time.sleep(1)
     return (
         SparkSession.builder.appName(f"skew-stress-aqe-{adaptive}")
         .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]")
@@ -70,7 +68,6 @@ def build_spark(adaptive: bool) -> SparkSession:
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.autoBroadcastJoinThreshold", "-1")
         .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(_UI_PORT))
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .getOrCreate()
@@ -110,13 +107,6 @@ def gen_zipf_events(spark: SparkSession, out: str, mult: int) -> None:
     )
 
 
-def _rest(spark: SparkSession, path: str):
-    app_id = spark.sparkContext.applicationId
-    url = f"http://localhost:{_UI_PORT}/api/v1/applications/{app_id}{path}"
-    with urllib.request.urlopen(url, timeout=30) as r:
-        return json.load(r)
-
-
 def _stage_task_quantiles(spark: SparkSession, since_stage: int) -> dict:
     """Task-duration evidence for the query just run: the stage with the
     largest straggler ratio (max/p50 task duration — the signal a
@@ -124,13 +114,13 @@ def _stage_task_quantiles(spark: SparkSession, since_stage: int) -> dict:
     task, among stages completed after ``since_stage``."""
     stages = [
         s
-        for s in _rest(spark, "/stages?status=complete")
+        for s in rest(spark, "/stages?status=complete")
         if s["stageId"] > since_stage and s["numCompleteTasks"] > 1
     ]
     per_stage = []
     for s in stages:
         try:
-            q = _rest(
+            q = rest(
                 spark,
                 f"/stages/{s['stageId']}/{s['attemptId']}/taskSummary"
                 "?quantiles=0.5,0.99,1.0",
@@ -159,7 +149,7 @@ def _stage_task_quantiles(spark: SparkSession, since_stage: int) -> dict:
 
 
 def _max_stage_id(spark: SparkSession) -> int:
-    stages = _rest(spark, "/stages")
+    stages = rest(spark, "/stages")
     return max((s["stageId"] for s in stages), default=-1)
 
 

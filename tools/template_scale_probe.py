@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
-sys.path.insert(0, os.path.join(_REPO, "tools"))
 
 from backup_repo_spark import registry, session as _session  # noqa: E402
 from backup_repo_spark.session import get_spark  # noqa: E402
