@@ -80,6 +80,7 @@ from backup_repo_spark.llm import (  # noqa: F401
     textstats,
 )
 from backup_repo_spark.plans import inspect as plans_inspect  # noqa: F401
+from backup_repo_spark.operators import cache_reuse  # noqa: F401
 
 # Round-12 driver-sample slice (SIXTH distinct slice, verified 0-key
 # overlap with the 260 keys sampled in CORRECTNESS_r01..r11): the

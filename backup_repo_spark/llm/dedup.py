@@ -55,8 +55,9 @@ def _sig8(shingles: DataFrame) -> DataFrame:
     """THE shipped 8-hash salted-md5 MinHash family (salts b1..b8):
     (doc_id, h1..h8). Engine-independent, so oracles verify the values.
 
-    Shape note (r13, measured, tools/sig_probe.py): a map-side
-    formulation — array_min(transform(shingle_arr, s -> md5(salt||s)))
+    Shape note (r13, measured by the retired sig_probe, README "Retired
+    probes"): a map-side formulation — array_min(transform(shingle_arr,
+    s -> md5(salt||s)))
     per hash, no explode / no Exchange / no aggregate — produces
     identical rows but was REJECTED at the 50x octave: +15.3% on the
     full banded pipeline (the sig aggregation's Exchange is the
@@ -106,7 +107,8 @@ def _exact_pairs(shingles: DataFrame, tau: float) -> DataFrame:
     Shape note (r13, measured): attaching the per-doc set size map-side
     at explode time (to drop the `sizes` groupBy + join-backs, the
     `_jaccard_verify` trick) REGRESSES this all-pairs form +70% at the
-    10x octave (tools/sized_shingles_probe.py) — the extra column rides
+    10x octave (the retired sized_shingles_probe, README "Retired
+    probes") — the extra column rides
     the quadratic sh-keyed self-join and its pair-mass aggregate, while
     the `sizes` join-backs it would save are broadcast-cheap at the
     sample scales these diagnostics are scoped to. Kept as-is."""
@@ -190,14 +192,15 @@ def _jaccard_verify(cand: DataFrame, repdocs: DataFrame, tau: float = 0.5) -> Da
     ONE array relation (ReusedExchange shares its exchange), no exploded
     pair x shared-shingle intermediate, no `sizes` groupBy, no join-backs.
     Values are bit-identical to the exploded form the DuckDB oracles
-    spell (tools/verify_probe.py asserts exact tuple equality; pinned by
+    spell (the retired verify_probe, README "Retired probes", asserted
+    exact tuple equality; pinned by
     test_adversarial_corpus.py::test_jaccard_verify_matches_exploded_form
     ): both arrays are distinct, so size(array_intersect) is the
     same integer the (doc_id, sh) equi-join counts, and i*1.0/(na+nb-i)
     over equal integers is the same double. Pairs sharing zero shingles
     surface as jaccard=0 here (vs dropping out of the old inner join) and
     are removed by the same >= tau filter (tau > 0 always). Measured at
-    the 50x template octave (tools/verify_probe.py, interleaved, noop
+    the 50x template octave (verify_probe, interleaved, noop
     sink): full banded pipeline 37.5 s -> 28.3 s, -24.7%."""
     arrs = repdocs.select("doc_id", _shingle3_arr().alias("arr"))
     va, vb = arrs.alias("va"), arrs.alias("vb")
@@ -640,8 +643,9 @@ def llm_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash document fingerprints; docs grouped by fingerprint.
 
-    r14 rewrite (guide §2.3/§2.4, tools/simhash_probe.py: −61% at the
-    10× template corpus, every sample): through r13 the 16-bit
+    r14 rewrite (guide §2.3/§2.4, the retired simhash_probe, README
+    "Retired probes": −61% at the 10× template corpus, every sample):
+    through r13 the 16-bit
     fingerprint was a map-only expression — 16 ``F.aggregate`` passes
     over a per-token md5 ``transform`` array. Higher-order functions are
     CodegenFallback (interpreted, per element, per bit), so the zero

@@ -99,7 +99,8 @@ def llm_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash(w1) exchange also satisfies the (w1, w2) window's clustering
     (subset partitioning — one exchange, two sorts). Two Generates (the
     vocab branch keeps one), no joins. Measured interleaved at the noop
-    sink (tools/lmscore_probe.py, equality exact at sf0.01/sf0.1/50×):
+    sink (the retired lmscore_probe, README "Retired probes"; equality
+    exact at sf0.01/sf0.1/50×):
     sf0.1 3.29 → 2.09 s median (−37%), 50× corpus 18.21 → 9.14 s
     (−50%)."""
     from pyspark.sql.window import Window
@@ -164,8 +165,9 @@ def llm_dup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     same integer per row (the count of a row's g-group IS the document
     frequency, and the inner join kept every row since dpf was built from
     the same relation) with ONE Generate and ONE exchange of the exploded
-    mass. Measured interleaved at the noop sink (tools/dupcov_probe.py,
-    equality exact at sf0.01/sf0.1/50×): sf0.1 11.21 → 5.68 s median
+    mass. Measured interleaved at the noop sink (the retired dupcov_probe,
+    README "Retired probes"; equality exact at sf0.01/sf0.1/50×): sf0.1
+    11.21 → 5.68 s median
     (−49%), 50× template corpus 49.51 → 24.78 s (−50%). Skew note: a
     globally hot shingle lands its rows in one window group — the same
     single-partition colocation the sort-merge join paid; the window

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from backup_repo_spark.registry import query
-from backup_repo_spark.session import load_table
+from backup_repo_spark.session import load_table, scratch_dir
 
 
 def _cosine(a, b):
@@ -661,8 +661,6 @@ def llm_ann_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     code change, and the per-partition files are independently scannable
     by a thousand executors. `llm_sim_search_ivf` proves the bucket math
     in pure compute; this key proves the layout actually prunes."""
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
     code = sum(
         (
@@ -674,7 +672,7 @@ def llm_ann_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         start=F.lit(0),
     ).alias("bucket")
     coded = emb.select("vec_id", "embedding", code)
-    out = tempfile.mkdtemp(prefix="brs_annpart_")
+    out = scratch_dir(spark, "llm_ann_partitioned")
     coded.write.mode("overwrite").partitionBy("bucket").parquet(out)
     q = coded.filter(F.col("vec_id") == 0).select("embedding", "bucket").collect()[0]
     probes = [int(q.bucket), int(q.bucket) ^ 1]

@@ -235,8 +235,9 @@ def llm_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-aggregates by (token, doc_id), i.e. redoes tf's work — joined back
     onto tf. Since tf holds exactly one row per (doc_id, token),
     ``count(*) OVER (PARTITION BY token)`` on tf IS that distinct count:
-    one Generate, one aggregate, no join (tools/tfidf_probe.py, equality
-    exact at sf0.01/sf0.1/50×: sf0.1 within noise, 50× template corpus
+    one Generate, one aggregate, no join (the retired tfidf_probe, README
+    "Retired probes"; equality exact at sf0.01/sf0.1/50×: sf0.1 within
+    noise, 50× template corpus
     3.31 → 2.76 s median, −16%)."""
     from pyspark.sql import Window
 
@@ -727,8 +728,9 @@ def llm_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle. ``min(doc_id) OVER (PARTITION BY bg)`` is the same value per
     row with ONE Generate and ONE exchange (the window min over a row's
     bg-group IS the aggregate's min; the inner join kept every row).
-    Measured interleaved at the noop sink (tools/novelty_probe.py,
-    equality exact at sf0.01/sf0.1/50×): sf0.1 3.19 → 2.14 s median
+    Measured interleaved at the noop sink (the retired novelty_probe,
+    README "Retired probes"; equality exact at sf0.01/sf0.1/50×): sf0.1
+    3.19 → 2.14 s median
     (−33%), 50× template corpus 18.16 → 7.70 s (−58%)."""
     from pyspark.sql import Window
 

@@ -210,8 +210,9 @@ def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_star_5way(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B17: TPC-H Q5-style 6-table star join.
 
-    r14 join-order fix (guide §3.1, measured by
-    tools/headline_shapes_probe.py): the old ``c⋈o`` -first order made
+    r14 join-order fix (guide §3.1, measured by the retired
+    headline_shapes_probe, README "Retired probes"): the old ``c⋈o``
+    -first order made
     Catalyst's size estimate for the joined side blow past the broadcast
     threshold, so the planner picked LINEITEM — the fact table — as the
     broadcast build (600k rows x 4 cols, a 0.34 s single-thread hash

@@ -18,6 +18,7 @@ Scale notes (100 TB design, SURVEY.md §4.3):
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,10 +56,10 @@ def get_spark(
 
     ``advisory_partition_mb`` is the guide-§2.2 overprovision-and-coalesce
     shape: set ``shuffle_partitions`` high and let AQE coalesce down to
-    this advisory size from REAL runtime bytes. Measured by
-    tools/aqe_probe.py at the 50x banded-dedup fixture (r13): partitions
-    256 + advisory 64 MB beat the pinned-32 profile by 18.1% (and the
-    AQE-off arm by 18.1+9.0%). Adopted by the scale tools in r14 per the
+    this advisory size from REAL runtime bytes. Measured by the retired
+    aqe_probe (README "Retired probes") at the 50x banded-dedup fixture
+    (r13): partitions 256 + advisory 64 MB beat the pinned-32 profile by
+    18.1% (and the AQE-off arm by 18.1+9.0%). Adopted by the scale tools in r14 per the
     r13 adjudication (do not adopt mid-record).
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -73,12 +74,13 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # r13 codec pass (optimization guide §2.3/§6), measured by
-        # tools/codec_probe.py at the 50x dedup corpus: zstd shuffle
-        # halves shuffle bytes (1248 -> 588 MB, -53%) for ~+14% executor
-        # CPU — the right trade on a NIC-bound cluster, the wrong one on
-        # this CPU-rich single box, so the local default stays lz4 (the
-        # Spark default) and production sets SPARK_GRAFT_IO_CODEC=zstd.
+        # r13 codec pass (optimization guide §2.3/§6), measured by the
+        # retired codec_probe (README "Retired probes") at the 50x dedup
+        # corpus: zstd shuffle halves shuffle bytes (1248 -> 588 MB, -53%)
+        # for ~+14% executor CPU — the right trade on a NIC-bound cluster,
+        # the wrong one on this CPU-rich single box, so the local default
+        # stays lz4 (the Spark default) and production sets
+        # SPARK_GRAFT_IO_CODEC=zstd.
         # Parquet zstd is strictly better locally too (lineitem sf0.1:
         # 10.26 -> 8.24 MB, no scan penalty), so it IS the default.
         .config(
@@ -104,6 +106,26 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def scratch_dir(spark: SparkSession, tag: str) -> str:
+    """A fresh, empty directory for one call's scratch output, named after
+    its writer ``tag``.
+
+    It lives under ``brs_scratch`` in the SparkContext's root directory
+    (``SparkFiles.getRootDirectory()``, under ``spark.local.dir``), which
+    Spark deletes on ``spark.stop()`` and at JVM exit: no caller cleans up,
+    and sessions not built by ``get_spark`` are covered too. A directory
+    per call keeps threads that run one key from sharing a path.
+
+    The root is on the driver's local disk, which local-mode executors
+    share; a cluster would need it on shared storage. No deployment needs
+    that today, so the root is not configurable."""
+    root = os.path.join(
+        spark._jvm.org.apache.spark.SparkFiles.getRootDirectory(), "brs_scratch"
+    )
+    os.makedirs(root, exist_ok=True)
+    return tempfile.mkdtemp(prefix=f"{tag}_", dir=root)
+
+
 # (session id, sf_dir, table) -> DataFrame. DataFrames are immutable logical
 # plans, so caching them is safe; it skips repeated footer/file-listing reads
 # when many queries touch the same table (the registry calls load_table per
@@ -115,12 +137,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table; `events` gets the nanos→timestamp fix.
 
     Session timezone is pinned to UTC on every load (runtime conf — it
-    governs expression evaluation, not the read schema): o_orderdate /
-    l_shipdate are TIMESTAMP_LTZ, so year()/date_trunc()/casts evaluate in
-    session tz, while DuckDB reads the same parquet as timezone-naive
-    wall-clock. A driver-built session inherits the JVM default tz; any
-    non-UTC host would silently shift every date-derived value without
-    this."""
+    governs expression evaluation, not the read schema). The date columns
+    (o_orderdate / l_shipdate) read as TIMESTAMP_NTZ, which no session tz
+    shifts; the pin matters for ``events.ts``, whose NTZ → TIMESTAMP cast
+    interprets the wall-clock in session tz, and for the date rendering
+    (date_format, window bounds) of that instant, which must agree with
+    DuckDB's timezone-naive reading of the same file. A driver-built
+    session inherits the JVM default tz; on a non-UTC host those values
+    would shift without this."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     key = (id(spark), sf_dir, name)
     df = _TABLE_CACHE.get(key)

@@ -43,7 +43,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from backup_repo_spark.registry import query
-from backup_repo_spark.session import load_table
+from backup_repo_spark.session import load_table, scratch_dir
 from backup_repo_spark.sources.catalog import LayoutSpec, ensure_layout, read_layout
 
 FORMAT_NAME = "astro_layout"
@@ -252,10 +252,12 @@ class AstroLayoutDataSource(DataSource):
 
 
 def register(spark: SparkSession) -> None:
+    # The JVM resolves a data source name through its active session, which
+    # is per thread: without this, a connector key run off the thread that
+    # built the session fails with DATA_SOURCE_NOT_FOUND. Setting only the
+    # Python-side active session does not help.
+    spark._jvm.SparkSession.setActiveSession(spark._jsparkSession)
     spark.dataSource.register(AstroLayoutDataSource)
-
-
-_REPO_ROOT = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
 
 
 def ensure_range_layout(spark: SparkSession, sf_dir: str, table: str, key: str) -> str:
@@ -307,7 +309,7 @@ def dsv2_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     match the original table. The DDL/bulkload/scan round-trip of the
     reference in one query."""
     register(spark)
-    out = os.path.join(_REPO_ROOT, "spark-warehouse", f"astro_write_roundtrip-{os.getpid()}")
+    out = scratch_dir(spark, "dsv2_write_roundtrip")
     (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") < 5000)
@@ -352,7 +354,6 @@ def dsv2_stream_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     an execution detail, not a semantics change. Exercises the full Python
     streaming-source protocol: initialOffset → read → checkpoint commit,
     with readBetweenOffsets providing replay for recovery."""
-    import tempfile
     import uuid
 
     register(spark)
@@ -370,7 +371,7 @@ def dsv2_stream_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="brs_ckpt_"))
+        .option("checkpointLocation", scratch_dir(spark, "dsv2_stream_read_ckpt"))
         .start()
     )
     try:
@@ -396,13 +397,10 @@ def dsv2_stream_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. With dsv2_scan_pushdown (native scan of the range layout) /
     dsv2_write_roundtrip / dsv2_stream_read this covers all four connector
     planes (batch+stream x read+write), the Astro-connector parity matrix."""
-    import shutil
-    import tempfile
     import uuid
 
     register(spark)
-    out = os.path.join(_REPO_ROOT, "spark-warehouse", f"astro_stream_write-{os.getpid()}")
-    shutil.rmtree(out, ignore_errors=True)
+    out = scratch_dir(spark, "dsv2_stream_write")
     stream = (
         spark.readStream.format(FORMAT_NAME)
         .option("path", f"{sf_dir}/documents.parquet")
@@ -412,7 +410,7 @@ def dsv2_stream_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         stream.writeStream.format(FORMAT_NAME)
         .option("path", out)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="brs_ckpt_"))
+        .option("checkpointLocation", scratch_dir(spark, "dsv2_stream_write_ckpt"))
         .queryName(f"brs_dsv2_sw_{uuid.uuid4().hex[:8]}")
         .start()
     )

@@ -42,9 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from backup_repo_spark.registry import query
-from backup_repo_spark.session import load_table
-
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from backup_repo_spark.session import load_table, scratch_dir
 
 _CREATE_RE = re.compile(
     r"^\s*CREATE\s+TABLE\s+(?P<name>\w+)\s*\((?P<cols>.+)\)\s*"
@@ -116,9 +114,7 @@ class AstroDialect:
     def __init__(self, spark: SparkSession, workdir: str | None = None) -> None:
         self.spark = spark
         self.catalog: dict[str, _AstroTable] = {}
-        self.workdir = workdir or os.path.join(
-            _REPO_ROOT, "spark-warehouse", f"astro_ddl-{os.getpid()}"
-        )
+        self.workdir = workdir or scratch_dir(spark, "astro_ddl")
 
     # -- dispatcher ----------------------------------------------------------
     def sql(self, text: str) -> DataFrame:
@@ -341,10 +337,8 @@ def ddl_astro_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
     region layout) → delegated SELECT over the loaded table. The oracle runs
     the same aggregate on the original parquet — proving the dialect's
     create/load/query path is lossless."""
-    import tempfile
-
     dialect = AstroDialect(spark)
-    csv_dir = tempfile.mkdtemp(prefix="brs_astro_csv_")
+    csv_dir = scratch_dir(spark, "ddl_astro_dialect_csv")
     try:
         load_table(spark, sf_dir, "customer").select(
             "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
@@ -367,5 +361,4 @@ def ddl_astro_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = spark.createDataFrame(result.collect(), result.schema)
     finally:
         dialect.cleanup()
-        shutil.rmtree(csv_dir, ignore_errors=True)
     return out

@@ -28,13 +28,12 @@ Scale notes:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from backup_repo_spark.registry import query
-from backup_repo_spark.session import load_table
+from backup_repo_spark.session import load_table, scratch_dir
 
 _BITS = 8  # 256×256 z-grid over (l_partkey % 256, l_suppkey % 256)
 
@@ -100,7 +99,7 @@ def layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     both the bit-interleave math and that the layout is lossless. The
     min/max zval columns prove the filtered set maps to a compact z-range
     — the pruning the layout exists to enable."""
-    out = tempfile.mkdtemp(prefix="brs_zorder_")
+    out = scratch_dir(spark, "layout_zorder")
     write_zordered(load_table(spark, sf_dir, "lineitem"), "l_partkey", "l_suppkey", out)
     back = spark.read.parquet(out)
     return (
@@ -150,8 +149,8 @@ def layout_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a shuffle-free coalesce, and aggregate from the compacted layout.
     The oracle runs on the source table — compaction must be lossless.
     tests/test_plans.py asserts the file count actually drops."""
-    frag = tempfile.mkdtemp(prefix="brs_frag_")
-    comp = tempfile.mkdtemp(prefix="brs_comp_")
+    frag = scratch_dir(spark, "layout_compaction_frag")
+    comp = scratch_dir(spark, "layout_compaction")
     load_table(spark, sf_dir, "orders").repartition(64).write.mode(
         "overwrite"
     ).parquet(frag)

@@ -19,22 +19,11 @@ bulk_bucketed_join).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from backup_repo_spark.registry import query
-from backup_repo_spark.session import load_events, load_table
-
-_REPO_ROOT = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
-
-
-def _wh(name: str) -> str:
-    # Per-process suffix: concurrent runs (e.g. selfcheck + pytest) must not
-    # race on the same scratch directory — overwrite-vs-read collisions show
-    # up as phantom diffs.
-    return os.path.join(_REPO_ROOT, "spark-warehouse", f"{name}-{os.getpid()}")
+from backup_repo_spark.session import load_events, load_table, scratch_dir
 
 
 @query(
@@ -62,7 +51,7 @@ def dml_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    target_path = _wh("dml_upsert_target")
+    target_path = scratch_dir(spark, "dml_upsert_target")
     o.filter(F.col("o_orderkey") < 1000).write.mode("overwrite").parquet(target_path)
     updates = o.filter(F.col("o_orderkey").between(500, 1499)).select(
         "o_orderkey",
@@ -79,7 +68,7 @@ def dml_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("u.o_totalprice", "t.o_totalprice").alias("o_totalprice"),
         )
     )
-    out = _wh("dml_upsert_merged")
+    out = scratch_dir(spark, "dml_upsert_merged")
     merged.write.mode("overwrite").parquet(out)
     return spark.read.parquet(out).orderBy("o_orderkey")
 
@@ -102,7 +91,7 @@ def dml_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    out = _wh("dml_dynpart_orders")
+    out = scratch_dir(spark, "dml_dynpart_orders")
     o.write.partitionBy("o_orderstatus").mode("overwrite").parquet(out)
     patched = o.filter(F.col("o_orderstatus") == "F").withColumn(
         "o_totalprice", F.col("o_totalprice") + 100.0
@@ -128,7 +117,7 @@ def ingest_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC source/sink round-trip (the second columnar format Spark ships;
     same pushdown/pruning machinery as parquet)."""
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 5000)
-    out = _wh("ingest_orc_lineitem")
+    out = scratch_dir(spark, "ingest_orc_lineitem")
     li.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
     return (
@@ -150,7 +139,7 @@ def ingest_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     DATA analog for semi-structured ingest; schema inference is the
     CSV/JSON-only convenience — parquet/ORC are self-describing)."""
     d = load_table(spark, sf_dir, "documents")
-    out = _wh("ingest_json_documents")
+    out = scratch_dir(spark, "ingest_json_documents")
     d.write.mode("overwrite").json(out)
     back = spark.read.json(out)  # schema inferred
     return (
@@ -171,7 +160,7 @@ def ingest_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XML sink + source round-trip (native in Spark 4 — the third
     semi-structured format alongside JSON/CSV)."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    out = _wh("ingest_xml_documents")
+    out = scratch_dir(spark, "ingest_xml_documents")
     d.write.mode("overwrite").format("xml").option("rowTag", "doc").save(out)
     back = spark.read.format("xml").option("rowTag", "doc").load(out)
     return (
@@ -205,7 +194,7 @@ def ingest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     long-lived 100 TB dataset needs (never rewrite history to add a
     column). The oracle replays the same two-generation union."""
     d = load_table(spark, sf_dir, "documents")
-    out = _wh("ingest_schema_evo")
+    out = scratch_dir(spark, "ingest_schema_evo")
     gen1 = d.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang")
     gen2 = d.filter(F.col("doc_id") % 2 == 1).select("doc_id", "lang", "n_chars")
     gen1.write.mode("overwrite").parquet(out)
@@ -277,7 +266,7 @@ def ingest_csv_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
     — must match the parquet original. The LOAD DATA analog for delimited
     feeds that don't arrive as parquet."""
     d = load_table(spark, sf_dir, "documents")
-    out = _wh("ingest_csv_dialect")
+    out = scratch_dir(spark, "ingest_csv_dialect")
     (
         d.write.mode("overwrite")
         .option("header", "true")
@@ -374,11 +363,11 @@ def dml_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     the partition-scoped form); a lakehouse DELETE is file-level
     bookkeeping over exactly this rewrite."""
     d = load_table(spark, sf_dir, "documents")
-    target = _wh("dml_delete_target")
+    target = scratch_dir(spark, "dml_delete_target")
     d.write.mode("overwrite").parquet(target)
     stored = spark.read.parquet(target)
     kept = stored.filter(~((F.col("source") == "src3") | (F.col("doc_id") % 97 == 0)))
-    out = _wh("dml_delete_after")
+    out = scratch_dir(spark, "dml_delete_after")
     kept.write.mode("overwrite").parquet(out)
     return (
         spark.read.parquet(out)
@@ -411,8 +400,8 @@ def dml_snapshot_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest, not a directory copy (only changed files differ), but the
     read-at-version semantics are identical."""
     d = load_table(spark, sf_dir, "documents")
-    v1 = _wh("dml_snap_v1")
-    v2 = _wh("dml_snap_v2")
+    v1 = scratch_dir(spark, "dml_snap_v1")
+    v2 = scratch_dir(spark, "dml_snap_v2")
     d.write.mode("overwrite").parquet(v1)
     spark.read.parquet(v1).filter(F.col("source") != "src3").write.mode(
         "overwrite"

@@ -22,19 +22,14 @@ distribution so output files are even-sized regardless of skew.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from backup_repo_spark.registry import query
-from backup_repo_spark.session import load_table
+from backup_repo_spark.session import load_table, scratch_dir
 from backup_repo_spark.sources.catalog import LayoutSpec, read_layout
-
-
-def _tmpdir(tag: str) -> str:
-    return tempfile.mkdtemp(prefix=f"brs_{tag}_")
 
 
 @query(
@@ -48,7 +43,7 @@ def bulk_write_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6/B3: bulk load — range-partition by the 'rowkey' (o_orderkey), sort
     within partitions, write partitioned parquet, read it back and aggregate.
     The oracle runs on the source table: the round-trip must be lossless."""
-    out = _tmpdir("bulk")
+    out = scratch_dir(spark, "bulk_write_read")
     o = load_table(spark, sf_dir, "orders")
     (
         o.repartitionByRange(8, "o_orderkey")
@@ -152,7 +147,7 @@ def ingest_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B2: Astro's LOAD DATA analog — CSV out, CSV in with an explicit
     StructType (no inference: declared schemas, like Astro's DDL-mapped
     tables), aggregate must match the parquet source exactly."""
-    out = _tmpdir("csv")
+    out = scratch_dir(spark, "ingest_csv")
     load_table(spark, sf_dir, "orders").write.mode("overwrite").option("header", True).csv(out)
     schema = T.StructType(
         [
@@ -190,7 +185,7 @@ def insert_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8: INSERT INTO ... SELECT (Astro's Put-encoding DML) — two inserts
     into a catalog parquet table, then aggregate; oracle is the equivalent
     UNION ALL over the source."""
-    out = _tmpdir("ins")
+    out = scratch_dir(spark, "insert_select")
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_src")
     spark.sql("DROP TABLE IF EXISTS brs_insert_tgt")
     spark.sql(
@@ -226,7 +221,7 @@ def ddl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     roundtrip through the catalog and DESCRIBE verbatim (Spark-DDL type
     names are a stable public surface), and the inserted row count must
     read back — a catalog/DDL defect turns the gate red."""
-    out = _tmpdir("ddl")
+    out = scratch_dir(spark, "ddl_roundtrip")
     spark.sql("DROP TABLE IF EXISTS brs_ddl_tbl")
     spark.sql(
         "CREATE TABLE brs_ddl_tbl (k BIGINT, name STRING, price DOUBLE) "

@@ -16,7 +16,7 @@ oracle at all.
 
 from __future__ import annotations
 
-import tempfile
+import os
 import uuid
 
 import pandas as pd
@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from backup_repo_spark.registry import query
+from backup_repo_spark.session import load_table, scratch_dir
 
 _EVENTS_RAW_SCHEMA = T.StructType(
     [
@@ -61,27 +62,27 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
+# sf_dir -> the session's staged 4-file events copy. A stopped session takes
+# its copy with it, so an entry is trusted only while its _SUCCESS exists.
+_MULTIBATCH_STAGED: dict[str, str] = {}
+
+
 def _stream_events_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events as a stream that yields SEVERAL micro-batches (the single
     testdata file is one batch, which would leave incremental-merge paths
-    untested): stage a 4-file copy once per (process, sf_dir) and stream it
+    untested): stage a 4-file copy once per (session, sf_dir) and stream it
     with maxFilesPerTrigger=1."""
-    import os
-    import tempfile
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    staged = os.path.join(
-        tempfile.gettempdir(), f"brs_ev_multi_{os.getpid()}_{abs(hash(sf_dir))}"
-    )
-    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
-        from backup_repo_spark.session import load_table
-
+    staged = _MULTIBATCH_STAGED.get(sf_dir)
+    if staged is None or not os.path.exists(os.path.join(staged, "_SUCCESS")):
+        staged = scratch_dir(spark, "events_multibatch")
         # range-partition by ts: micro-batches arrive roughly time-ordered
         # (the realistic ingest shape), so an incremental consumer's
         # per-batch working set is a time slice, not the whole history.
         load_table(spark, sf_dir, "events").repartitionByRange(4, "ts").write.mode(
             "overwrite"
         ).parquet(staged)
+        _MULTIBATCH_STAGED[sf_dir] = staged
     raw = (
         spark.readStream.schema(_EVENTS_RAW_SCHEMA)
         .option("maxFilesPerTrigger", 1)
@@ -94,7 +95,7 @@ def _run_to_table(df: DataFrame, mode: str) -> DataFrame:
     """Execute a streaming DataFrame to completion into a memory sink and
     return the sink contents."""
     name = f"brs_sink_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="brs_ckpt_")
+    ckpt = scratch_dir(df.sparkSession, "stream_ckpt")
     q = (
         df.writeStream.format("memory")
         .queryName(name)
@@ -335,8 +336,6 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     count (the oracle). This is the metrics surface a production monitor
     scrapes for lag/throughput; exactly-once input accounting is the
     invariant that makes those dashboards trustworthy."""
-    import uuid
-
     ev = _stream_events(spark, sf_dir)
     name = f"brs_prog_{uuid.uuid4().hex[:8]}"
     q = (
@@ -345,7 +344,7 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="brs_ckpt_"))
+        .option("checkpointLocation", scratch_dir(spark, "stream_progress_metrics_ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -379,12 +378,10 @@ def stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     the verified result re-aggregates the landed files — proving the landed
     data, not the in-flight stream. Append-safe projection (no open
     windows), complete aggregation done batch-side on the landed rows."""
-    import tempfile
-
     ev = _stream_events(spark, sf_dir)
     proj = ev.select("event_type", F.date_trunc("day", "ts").alias("day"))
-    out = tempfile.mkdtemp(prefix="brs_filesink_")
-    ckpt = tempfile.mkdtemp(prefix="brs_ckpt_")
+    out = scratch_dir(spark, "stream_file_sink")
+    ckpt = scratch_dir(spark, "stream_file_sink_ckpt")
     q = (
         proj.writeStream.format("parquet")
         .option("path", out)
@@ -415,10 +412,8 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (count, sum) per type is appended to a parquet staging dir keyed by
     batch id; the verified result merges the partials — decomposable-
     aggregate re-aggregation, the same partial→final contract as a shuffle."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="brs_febatch_")
-    ckpt = tempfile.mkdtemp(prefix="brs_ckpt_")
+    out = scratch_dir(spark, "stream_foreach_batch")
+    ckpt = scratch_dir(spark, "stream_foreach_batch_ckpt")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -579,8 +574,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket and rewrite only buckets the batch touches (dynamic partition
     overwrite — `dml_partition_overwrite` is that operator), keeping
     per-batch IO proportional to the delta, not the snapshot."""
-    import tempfile
-
     from pyspark.sql.window import Window
 
     ev = _stream_events_multibatch(spark, sf_dir).select(
@@ -592,8 +585,8 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("op"),
         "value",
     )
-    base = tempfile.mkdtemp(prefix="brs_cdc_")
-    ckpt = tempfile.mkdtemp(prefix="brs_ckpt_")
+    base = scratch_dir(spark, "stream_cdc_apply")
+    ckpt = scratch_dir(spark, "stream_cdc_apply_ckpt")
     state = {"v": -1}
 
     def apply_batch(bdf: DataFrame, bid: int) -> None:
@@ -651,16 +644,14 @@ def stream_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming twin of `dml_partition_overwrite`, and the reason continuous
     aggregates beat re-running the rollup: the rollup table is
     |hours × types|-sized while the input is unbounded."""
-    import tempfile
-
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     ev = _stream_events_multibatch(spark, sf_dir).select(
         F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd-HH").alias("hr"),
         "event_type",
         "value",
     )
-    out = tempfile.mkdtemp(prefix="brs_cagg_")
-    ckpt = tempfile.mkdtemp(prefix="brs_ckpt_")
+    out = scratch_dir(spark, "stream_continuous_aggregate")
+    ckpt = scratch_dir(spark, "stream_continuous_aggregate_ckpt")
     wrote = {"any": False}
 
     def merge_batch(bdf: DataFrame, bid: int) -> None:

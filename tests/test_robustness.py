@@ -10,6 +10,7 @@ import pytest
 
 from backup_repo_spark import registry
 from backup_repo_spark.session import load_table
+from backup_repo_spark.testing import compare, hard_problems
 from tests.conftest import SF_DIR
 
 _CONCURRENT = [
@@ -36,6 +37,26 @@ def test_concurrent_queries_share_one_session(spark):
     with ThreadPoolExecutor(max_workers=8) as pool:
         parallel = dict(pool.map(run, _CONCURRENT))
     assert parallel == serial
+
+
+@pytest.mark.parametrize(
+    "key", ["dml_upsert", "ingest_schema_evolution", "dsv2_write_roundtrip"]
+)
+def test_same_writer_key_from_four_threads(spark, key):
+    """One writer key run from four threads at once on the shared session.
+    Each call must write its own scratch directory (a shared one fails with
+    ``_temporary/0: No such file or directory``), and the connector key
+    must resolve its data source off the thread that built the session
+    (else DATA_SOURCE_NOT_FOUND). Every result must equal the serial one."""
+    serial = registry.QUERIES[key](spark, SF_DIR).toPandas()
+
+    def run(_: int):
+        return registry.QUERIES[key](spark, SF_DIR).toPandas()
+
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        parallel = list(pool.map(run, range(4)))
+    for pdf in parallel:
+        assert not hard_problems(compare(pdf, serial))
 
 
 def test_bad_sf_dir_fails_cleanly(spark):

@@ -1,0 +1,117 @@
+"""Scratch output has one owner: ``session.scratch_dir``. Keys that write
+do so under the SparkContext's own root, which Spark deletes when the
+session stops, so no key hand-rolls a temp path and nothing outlives the
+session."""
+
+from __future__ import annotations
+
+import os
+import re
+import subprocess
+import sys
+
+from tests.conftest import SF_DIR
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_ENGINE = os.path.join(_REPO, "backup_repo_spark")
+
+# the helper itself, and the layout catalog (meant to persist; its temp
+# build dirs carry the pid of the process building them)
+_OWNERS = {"session.py", os.path.join("sources", "catalog.py")}
+
+
+def _engine_sources():
+    for root, _, files in os.walk(_ENGINE):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                with open(path) as fh:
+                    src = fh.read()
+                yield os.path.relpath(path, _ENGINE), src
+
+
+def test_only_the_session_helper_makes_scratch_paths():
+    hits = [
+        f"{rel}:{n}: {line.strip()}"
+        for rel, src in _engine_sources()
+        if rel not in _OWNERS
+        for n, line in enumerate(src.splitlines(), 1)
+        if re.search(r"mkdtemp\(|gettempdir\(|getpid\(\)", line)
+    ]
+    assert not hits, "use session.scratch_dir:\n" + "\n".join(hits)
+
+
+def test_engine_cites_only_existing_probes():
+    """A cited ``tools/<name>_probe`` must exist; a retired one is cited
+    through README's "Retired probes" table instead."""
+    missing = [
+        f"{rel}: tools/{name}"
+        for rel, src in _engine_sources()
+        for name in re.findall(r"tools/(\w+_probe)\b", src)
+        if not os.path.exists(os.path.join(_REPO, "tools", f"{name}.py"))
+    ]
+    assert not missing, missing
+
+
+# one key per replaced scratch idiom: layout's and dml's private helpers,
+# the connector's and the dialect's warehouse paths, the connector
+# checkpoint, inline mkdtemp (clustering, simsearch, dialect CSV, stream
+# sinks and checkpoints) and the multi-batch events staging
+_KEYS = [
+    "bulk_write_read",
+    "dml_upsert",
+    "dsv2_write_roundtrip",
+    "dsv2_stream_write",
+    "dsv2_stream_read",
+    "ddl_astro_dialect",
+    "layout_zorder",
+    "llm_ann_partitioned",
+    "stream_watermark",
+    "stream_file_sink",
+    "stream_cdc_apply",
+]
+
+_CHILD = """
+import os, sys
+from backup_repo_spark import registry
+from backup_repo_spark.session import get_spark
+
+spark = get_spark("scratch-test", shuffle_partitions=4)
+for key in sys.argv[1].split(","):
+    registry.QUERIES[key](spark, sys.argv[2]).collect()
+spark.stop()
+for root, _, files in os.walk(sys.argv[3]):
+    for f in files:
+        print("LEFT", os.path.join(root, f))
+"""
+
+
+def test_key_output_is_gone_once_the_session_stops(tmp_path):
+    """Run the keys in a fresh session with TMPDIR, SPARK_LOCAL_DIRS and the
+    cwd under ``tmp_path``, stop it, and list what is left before the JVM
+    exits: no file may remain there, and the repo's ``spark-warehouse/``
+    gains nothing but the layout catalog."""
+    warehouse = os.path.join(_REPO, "spark-warehouse")
+
+    def entries():
+        return set(os.listdir(warehouse)) if os.path.isdir(warehouse) else set()
+
+    before = entries()
+    cwd = tmp_path / "cwd"
+    for d in ("cwd", "tmp", "local"):
+        (tmp_path / d).mkdir()
+    env = dict(
+        os.environ,
+        PYTHONPATH=_REPO,
+        TMPDIR=str(tmp_path / "tmp"),
+        SPARK_LOCAL_DIRS=str(tmp_path / "local"),
+        SPARK_GRAFT_CPUS="2",
+    )
+    run = subprocess.run(
+        [sys.executable, "-c", _CHILD, ",".join(_KEYS), SF_DIR, str(tmp_path)],
+        cwd=cwd, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    left = [line for line in run.stdout.splitlines() if line.startswith("LEFT ")]
+    assert not left, "\n".join(left[:20])
+    assert entries() - before <= {"layout_catalog"}, sorted(entries() - before)
