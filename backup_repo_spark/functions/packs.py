@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from backup_repo_spark.registry import query
-from backup_repo_spark.session import load_table
+from backup_repo_spark.session import base_sql, load_table
 
 
 @query(
@@ -369,8 +369,8 @@ def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     programmatic entry path: the plan is compiled with typed parameters, not
     string-spliced literals. Oracle is the same query with the parameters
     inlined."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
+    return base_sql(
+        spark, sf_dir, ["orders"],
         """
         SELECT o_orderstatus, count(*) AS n
         FROM orders
@@ -486,8 +486,8 @@ def fn_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """stack(n, ...) generator — the SQL spelling of unpivot (cf.
     reshape_unpivot for the DataFrame API form). Pure generate, no
     shuffle."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
+    return base_sql(
+        spark, sf_dir, ["orders"],
         """
         SELECT o_orderkey, measure, val
         FROM orders
@@ -642,7 +642,6 @@ def fn_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     by host, partition by path, decode stored payloads). The oracle mirrors
     parse_url by reconstructing the parts and form-encoding (space→'+')
     over the documents' constrained charset."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents_url")
     return spark.sql(
         """
         SELECT doc_id,
@@ -657,9 +656,10 @@ def fn_url(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM (SELECT doc_id, text,
                      concat('https://', source, '.example.com/docs/', doc_id,
                             '?lang=', lang) AS u
-              FROM documents_url)
+              FROM {documents})
         ORDER BY doc_id
-        """
+        """,
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 

@@ -254,12 +254,11 @@ def llm_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     big side and stays distributed. Docs shorter than 8 tokens contribute
     no shingles (guarded — Spark's sequence() would otherwise count
     backwards)."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("docs_cont")
     return spark.sql(
         """
         WITH t AS (SELECT doc_id, split(text, ' ') AS toks,
                           substring(md5(CAST(doc_id AS STRING)), 1, 2) AS h
-                   FROM docs_cont),
+                   FROM {docs}),
         sh AS (SELECT doc_id, h, explode(CASE WHEN size(toks) >= 8
                  THEN transform(sequence(1, size(toks) - 7),
                                 i -> concat_ws(' ', slice(toks, i, 8)))
@@ -272,7 +271,8 @@ def llm_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         LEFT JOIN te ON d.doc_id = te.doc_id
         LEFT JOIN tr ON te.shingle = tr.shingle
         GROUP BY d.doc_id ORDER BY d.doc_id
-        """
+        """,
+        docs=load_table(spark, sf_dir, "documents"),
     )
 
 

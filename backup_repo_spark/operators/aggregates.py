@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from backup_repo_spark.registry import query
-from backup_repo_spark.session import load_table
+from backup_repo_spark.session import base_sql, load_table
 
 
 @query(
@@ -154,8 +154,8 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B23: GROUPING SETS — one pass, Expand operator fans each row into its
     grouping combinations before the (partial) aggregation."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(
+    return base_sql(
+        spark, sf_dir, ["lineitem"],
         """
         SELECT coalesce(l_returnflag, 'ALL') AS rf, coalesce(l_linestatus, 'ALL') AS ls,
                count(*) AS n, round(sum(l_quantity), 2) AS sq
@@ -463,8 +463,8 @@ def agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered string aggregation — listagg WITHIN GROUP (Spark 4) vs
     DuckDB string_agg(... ORDER BY): deterministic ordered concat per
     group."""
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation")
-    return spark.sql(
+    return base_sql(
+        spark, sf_dir, ["nation"],
         """
         SELECT n_regionkey,
                listagg(n_name, ',') WITHIN GROUP (ORDER BY n_name) AS nations
@@ -549,8 +549,8 @@ def agg_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     tell a subtotal row's NULL from a data NULL. coalesce on the grouped
     columns plus the integer flags makes every output row self-describing
     (what level of the rollup it belongs to)."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(
+    return base_sql(
+        spark, sf_dir, ["lineitem"],
         """
         SELECT coalesce(l_returnflag, 'ALL') AS rf, coalesce(l_linestatus, 'ALL') AS ls,
                CAST(grouping(l_returnflag) AS BIGINT) AS g_rf,
@@ -580,8 +580,8 @@ def agg_boolean(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollups in one pass instead of one filtered subquery per condition.
     All three partial-aggregate (AND/OR/sum are associative+commutative),
     so map-side combine applies at scale."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
+    return base_sql(
+        spark, sf_dir, ["orders"],
         """
         SELECT o_orderstatus,
                count_if(o_totalprice > 200000) AS n_big,
@@ -608,16 +608,16 @@ def agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates (bitmaps OR associatively), so map-side combine applies and
     the shuffle carries fixed-size bitmaps instead of every distinct id —
     the exact-answer analog of HLL for dense integer keys at 100 TB."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events_bm")
     return spark.sql(
         """
         SELECT event_type, sum(bitmap_count(bm)) AS du
         FROM (
           SELECT event_type, bitmap_bucket_number(user_id) AS bucket,
                  bitmap_construct_agg(bitmap_bit_position(user_id)) AS bm
-          FROM events_bm GROUP BY 1, 2
+          FROM {events} GROUP BY 1, 2
         ) GROUP BY event_type ORDER BY event_type
-        """
+        """,
+        events=load_table(spark, sf_dir, "events"),
     )
 
 

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from backup_repo_spark.registry import query
-from backup_repo_spark.session import load_events, load_table
+from backup_repo_spark.session import base_sql, load_events, load_table
 
 
 @query(
@@ -54,9 +54,8 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     strict-ordering semantics product funnels need (a purchase before the
     first view does not count). Three user-grain aggregations, each a
     partial-agg-friendly groupBy on user_id."""
-    ev = load_events(spark, sf_dir)
-    ev.createOrReplaceTempView("events")
-    return spark.sql(
+    return base_sql(
+        spark, sf_dir, ["events"],
         """
         WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
                     WHERE event_type = 'signup' GROUP BY user_id),
@@ -168,7 +167,6 @@ def events_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id tie-breaks identical timestamps so the intervals are
     deterministic under any partitioning. At 100 TB this is the incremental
     MERGE pattern's full-rebuild analog — linear in events, no self-join."""
-    load_events(spark, sf_dir).createOrReplaceTempView("events_scd")
     return spark.sql(
         """
         SELECT user_id, event_type AS state,
@@ -179,8 +177,9 @@ def events_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
                    'yyyy-MM-dd HH:mm:ss'), '9999-12-31 00:00:00') AS eff_to,
                (lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
                    IS NULL) AS is_current
-        FROM events_scd ORDER BY user_id, eff_from
-        """
+        FROM {events} ORDER BY user_id, eff_from
+        """,
+        events=load_events(spark, sf_dir),
     )
 
 
@@ -219,7 +218,6 @@ def events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     event once on user_id, which is what survives a 100 TB clickstream.
     event_id tie-breaks equal timestamps; the lookback cut is applied
     after attribution, deterministically on both engines."""
-    load_events(spark, sf_dir).createOrReplaceTempView("events_attr")
     return spark.sql(
         """
         WITH tagged AS (
@@ -228,7 +226,7 @@ def events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                      AS touch_id,
                  CASE WHEN event_type IN ('click','view') THEN ts END
                      AS touch_ts
-          FROM events_attr),
+          FROM {events}),
         w AS (
           SELECT event_id, user_id, ts, event_type,
                  last_value(touch_id) IGNORE NULLS OVER
@@ -246,7 +244,8 @@ def events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                coalesce(CASE WHEN last_touch_ts >= ts - INTERVAL 7 DAY
                              THEN last_touch END, -1) AS attributed_touch
         FROM w WHERE event_type = 'purchase' ORDER BY event_id
-        """
+        """,
+        events=load_events(spark, sf_dir),
     )
 
 

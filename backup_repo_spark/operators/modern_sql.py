@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from backup_repo_spark.registry import query
-from backup_repo_spark.session import load_events, load_table
+from backup_repo_spark.session import base_sql, load_events, load_table
 
 
 @query(
@@ -35,8 +35,8 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT/GROUP BY the oracle runs — table first, then WHERE, AGGREGATE,
     ORDER BY as postfix stages. Catalyst unifies both syntaxes before
     optimization, so pushdown/pruning are unchanged."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(
+    return base_sql(
+        spark, sf_dir, ["lineitem"],
         """
         FROM lineitem
         |> WHERE l_quantity > 45
@@ -62,8 +62,8 @@ def sql_execute_immediate(spark: SparkSession, sf_dir: str) -> DataFrame:
     string is compiled at execution and the parameter is passed as data
     (USING), never spliced into the text. The injection-safe way to
     template 100 TB maintenance jobs."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
+    return base_sql(
+        spark, sf_dir, ["orders"],
         """
         EXECUTE IMMEDIATE
           'SELECT o_orderstatus, count(*) AS n
@@ -96,8 +96,8 @@ def fn_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
     case-folding into the comparison operator itself — no lower() wrapper
     column for Catalyst to re-derive everywhere. Oracle mirrors with
     explicit lower() (DuckDB has no column collations)."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    return spark.sql(
+    return base_sql(
+        spark, sf_dir, ["customer"],
         """
         WITH mixed AS (
           SELECT CASE WHEN c_custkey % 2 = 0 THEN lower(c_mktsegment)
@@ -155,10 +155,10 @@ def sql_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     state referenced directly in queries — the clean replacement for
     string-formatting thresholds into SQL text. The variable is resolved
     at plan time, so the filter still pushes down to the scan."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     spark.sql("DECLARE OR REPLACE VARIABLE price_floor DOUBLE DEFAULT 0.0")
     spark.sql("SET VAR price_floor = 250000.0")
-    return spark.sql(
+    return base_sql(
+        spark, sf_dir, ["orders"],
         """
         SELECT o_orderstatus, count(*) AS n
         FROM orders WHERE o_totalprice > price_floor
@@ -183,14 +183,14 @@ def sql_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage codegen, no serialization boundary). The right default for
     shared business logic at 100 TB; the oracle inlines the same expression
     by hand."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     spark.sql(
         """
         CREATE OR REPLACE TEMPORARY FUNCTION disc_price(p DOUBLE, d DOUBLE)
         RETURNS DOUBLE RETURN p * (1.0 - d)
         """
     )
-    return spark.sql(
+    return base_sql(
+        spark, sf_dir, ["lineitem"],
         """
         SELECT l_returnflag, count(*) AS n,
                CAST(sum(CAST(disc_price(l_extendedprice, l_discount)
@@ -251,13 +251,13 @@ def sql_identifier_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries (the per-tenant / per-partition-table pattern). Resolution
     happens at analysis time, so the plan is identical to the static
     query the oracle runs."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_idc")
-    return spark.sql(
+    return base_sql(
+        spark, sf_dir, ["orders"],
         """
         SELECT IDENTIFIER(:c) AS status, count(*) AS n
         FROM IDENTIFIER(:t) GROUP BY IDENTIFIER(:c) ORDER BY status
         """,
-        args={"c": "o_orderstatus", "t": "orders_idc"},
+        args={"c": "o_orderstatus", "t": "orders"},
     )
 
 
@@ -279,8 +279,8 @@ def sql_values_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     ALL — the literal-mapping-table idiom (no temp file, no
     createDataFrame round-trip). The VALUES relation is constant-folded
     and broadcast."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    return spark.sql(
+    return base_sql(
+        spark, sf_dir, ["customer"],
         """
         WITH tiers(seg, tier) AS (VALUES
           ('BUILDING', 'core'), ('AUTOMOBILE', 'core'),
@@ -305,8 +305,8 @@ def sql_lateral_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     of generator joins that existing HiveQL/SparkSQL workloads arrive
     with (the modern equivalents ship as `join_lateral` and
     `fn_explode_outer`). Same Generate operator in the plan either way."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(
+    return base_sql(
+        spark, sf_dir, ["documents"],
         """
         SELECT doc_id, tok
         FROM documents LATERAL VIEW explode(split(text, ' ')) x AS tok

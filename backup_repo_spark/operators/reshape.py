@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from backup_repo_spark.registry import query
-from backup_repo_spark.session import load_table
+from backup_repo_spark.session import base_sql, load_table
 
 
 @query(
@@ -175,9 +175,7 @@ def join_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LATERAL correlated subquery in the FROM clause — per-outer-row
     aggregate. Catalyst decorrelates it into an aggregate + join on the
     correlation key (no per-row re-execution), so it scales like a join."""
-    for t in ("region", "nation"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_LATERAL)
+    return base_sql(spark, sf_dir, ["region", "nation"], _LATERAL)
 
 
 @query(
@@ -263,8 +261,8 @@ def sql_modern_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Modern SQL conveniences: GROUP BY ALL (group on every non-aggregate
     select item) and star-EXCEPT projection (Spark `* EXCEPT (...)` ≡
     DuckDB `* EXCLUDE (...)`)."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(
+    return base_sql(
+        spark, sf_dir, ["lineitem"],
         """
         SELECT * EXCEPT (avg_disc)
         FROM (
@@ -288,8 +286,8 @@ def sql_cluster_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     Global row SET is unchanged (the oracle is the plain projection; the
     driver's value-hash is order-insensitive); what changes is physical
     placement: rows co-located by nation and locally sorted."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    return spark.sql(
+    return base_sql(
+        spark, sf_dir, ["customer"],
         """
         SELECT c_nationkey, c_custkey, c_mktsegment FROM customer
         DISTRIBUTE BY c_nationkey SORT BY c_nationkey, c_custkey

@@ -16,13 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from backup_repo_spark.registry import query
-from backup_repo_spark.session import load_table
-
-
-def _sql(spark: SparkSession, sf_dir: str, sql: str, tables: list[str]) -> DataFrame:
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(sql)
+from backup_repo_spark.session import base_sql
 
 
 _SUBQ_SCALAR = """
@@ -36,7 +30,7 @@ _SUBQ_SCALAR = """
 def subq_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B51: uncorrelated scalar subquery (threshold rounded so both engines
     compare against bit-identical values)."""
-    return _sql(spark, sf_dir, _SUBQ_SCALAR, ["orders"])
+    return base_sql(spark, sf_dir, ["orders"], _SUBQ_SCALAR)
 
 
 _SUBQ_EXISTS = """
@@ -49,7 +43,7 @@ _SUBQ_EXISTS = """
 @query("subq_exists", oracle=_SUBQ_EXISTS)
 def subq_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B52: IN subquery → planned as a left semi join."""
-    return _sql(spark, sf_dir, _SUBQ_EXISTS, ["customer", "orders"])
+    return base_sql(spark, sf_dir, ["customer", "orders"], _SUBQ_EXISTS)
 
 
 _SUBQ_CORR = """
@@ -64,7 +58,7 @@ _SUBQ_CORR = """
 def subq_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B53: correlated scalar subquery — Catalyst decorrelates into an
     aggregate + join on the correlation key (c_nationkey)."""
-    return _sql(spark, sf_dir, _SUBQ_CORR, ["customer"])
+    return base_sql(spark, sf_dir, ["customer"], _SUBQ_CORR)
 
 
 _CTE = """
@@ -79,7 +73,7 @@ _CTE = """
 @query("cte_reuse", oracle=_CTE)
 def cte_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B54: CTE referenced twice (body + scalar subquery over it)."""
-    return _sql(spark, sf_dir, _CTE, ["orders"])
+    return base_sql(spark, sf_dir, ["orders"], _CTE)
 
 
 _RECURSIVE = """
@@ -102,7 +96,7 @@ def cte_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursion, outer-joined to per-month order counts — the gap-preserving
     calendar pattern, in IDENTICAL SQL on both engines. (Astro's Spark 1.4
     had no recursion at all.)"""
-    return _sql(spark, sf_dir, _RECURSIVE, ["orders"])
+    return base_sql(spark, sf_dir, ["orders"], _RECURSIVE)
 
 
 @query(
@@ -125,9 +119,8 @@ def subq_not_in_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join count — the difference every migration guide warns about,
     demonstrated inside the engine. Plans: NOT IN becomes a null-aware
     anti join (one extra null-check branch); NOT EXISTS a plain left anti."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    return spark.sql(
+    return base_sql(
+        spark, sf_dir, ["orders", "customer"],
         """
         WITH sub AS (SELECT nullif(o_custkey % 50, 7) AS k FROM orders)
         SELECT
@@ -159,9 +152,8 @@ def subq_exists_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-semi-style ExistenceJoin rather than filtering rows, the idiom
     for feature flags / entitlement columns. Complements `subq_exists`
     (WHERE form) and `join_semi`."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
+    return base_sql(
+        spark, sf_dir, ["customer", "orders"],
         """
         SELECT c_custkey,
                CAST(EXISTS(SELECT 1 FROM orders

@@ -29,13 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from backup_repo_spark.registry import query
-from backup_repo_spark.session import load_table
-
-
-def _sql(spark: SparkSession, sf_dir: str, sql: str, tables: list[str]) -> DataFrame:
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(sql)
+from backup_repo_spark.session import base_sql, load_table
 
 
 _Q2 = """
@@ -107,10 +101,7 @@ def tpch_q2_style(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles within one engine, so the filter is exact; expanding the
     min through the window keeps every tied minimum-cost supplier,
     exactly as the subquery form does."""
-    return _sql(
-        spark, sf_dir, _Q2_SPARK,
-        ["lineitem", "part", "supplier", "nation", "region"],
-    )
+    return base_sql(spark, sf_dir, ["lineitem", "part", "supplier", "nation", "region"], _Q2_SPARK)
 
 
 _Q7 = """
@@ -140,9 +131,8 @@ def tpch_q7_style(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (nation→region) joined twice under different roles, a disjunctive
     cross-role predicate, then a year-bucketed rollup. Regions (not single
     nations) keep the result non-empty at the tiny scale factors."""
-    return _sql(
-        spark, sf_dir, _Q7,
-        ["supplier", "lineitem", "orders", "customer", "nation", "region"],
+    return base_sql(
+        spark, sf_dir, ["supplier", "lineitem", "orders", "customer", "nation", "region"], _Q7
     )
 
 
@@ -176,9 +166,9 @@ def tpch_q8_style(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q8 shape: market share — ratio of a conditional sum to a total over an
     8-table star join. Both sums run in DECIMAL (exact) and only the final
     ratio is double, so the division is bit-identical across engines."""
-    return _sql(
-        spark, sf_dir, _Q8,
-        ["part", "supplier", "lineitem", "orders", "customer", "nation", "region"],
+    return base_sql(
+        spark, sf_dir, ["part", "supplier", "lineitem", "orders", "customer", "nation", "region"],
+        _Q8,
     )
 
 
@@ -203,9 +193,7 @@ def tpch_q9_style(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q9 shape: product-type profit by nation and year. With no partsupp,
     supply cost is proxied by 10% of p_retailprice — the revenue-minus-cost
     expression and the nation/year rollup are the shape under test."""
-    return _sql(
-        spark, sf_dir, _Q9, ["part", "supplier", "lineitem", "orders", "nation"]
-    )
+    return base_sql(spark, sf_dir, ["part", "supplier", "lineitem", "orders", "nation"], _Q9)
 
 
 _Q10_ORACLE = """
@@ -281,7 +269,7 @@ def tpch_q11_style(spark: SparkSession, sf_dir: str) -> DataFrame:
     total. The CTE is referenced twice (body + scalar subquery); both sums
     are exact DECIMAL so the > threshold cannot flip between engines.
     n_regionkey (not n_name) keeps the supplier set non-empty at sf0.001."""
-    return _sql(spark, sf_dir, _Q11, ["lineitem", "supplier", "nation"])
+    return base_sql(spark, sf_dir, ["lineitem", "supplier", "nation"], _Q11)
 
 
 _Q16 = """
@@ -300,7 +288,7 @@ def tpch_q16_style(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q16 shape: supplier-relationship count — distinct-count per
     brand/type/size with a NOT IN anti-join excluding negative-balance
     suppliers (s_acctbal is never NULL, so NOT IN is safe)."""
-    return _sql(spark, sf_dir, _Q16, ["part", "lineitem", "supplier"])
+    return base_sql(spark, sf_dir, ["part", "lineitem", "supplier"], _Q16)
 
 
 _Q17 = """
@@ -320,7 +308,7 @@ def tpch_q17_style(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold per part. The average is exact-decimal-sum ÷ count (double
     division of identical operands), so the < comparison is stable; Catalyst
     decorrelates it to one aggregate over lineitem + a join."""
-    return _sql(spark, sf_dir, _Q17, ["lineitem", "part"])
+    return base_sql(spark, sf_dir, ["lineitem", "part"], _Q17)
 
 
 _Q19_ORACLE = """
@@ -389,7 +377,7 @@ def tpch_q20_style(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped HAVING on exact-DECIMAL quantity, restricted to one geography.
     The available-quantity correlation of real Q20 is re-expressed as the
     HAVING threshold (no partsupp table)."""
-    return _sql(spark, sf_dir, _Q20, ["supplier", "nation", "lineitem", "part"])
+    return base_sql(spark, sf_dir, ["supplier", "nation", "lineitem", "part"], _Q20)
 
 
 _Q21 = """
@@ -419,4 +407,4 @@ def tpch_q21_style(spark: SparkSession, sf_dir: str) -> DataFrame:
     commitdate/receiptdate, "late" is re-expressed as l_returnflag = 'R'.
     Catalyst plans one semi and one anti join; s_name tiebreak makes the
     LIMIT deterministic."""
-    return _sql(spark, sf_dir, _Q21, ["supplier", "lineitem", "orders", "nation"])
+    return base_sql(spark, sf_dir, ["supplier", "lineitem", "orders", "nation"], _Q21)

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from backup_repo_spark.registry import query
-from backup_repo_spark.session import load_table
+from backup_repo_spark.session import base_sql, load_table
 
 
 @query(
@@ -183,14 +183,6 @@ def fn_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql(spark: SparkSession, sf_dir: str, sql: str, tables: list[str]) -> DataFrame:
-    from backup_repo_spark.session import load_table as _lt
-
-    for t in tables:
-        _lt(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(sql)
-
-
 _Q13 = """
     SELECT c_count, count(*) AS custdist
     FROM (SELECT c.c_custkey, count(o.o_orderkey) AS c_count
@@ -206,7 +198,7 @@ def tpch_q13_style(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q13 shape: customer order-count distribution — outer join preserving
     zero-order customers, then a second aggregation over the first's output
     (the classic two-level agg; count(col) vs count(*) NULL semantics)."""
-    return _sql(spark, sf_dir, _Q13, ["customer", "orders"])
+    return base_sql(spark, sf_dir, ["customer", "orders"], _Q13)
 
 
 _Q15 = """
@@ -231,7 +223,7 @@ def tpch_q15_style(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar-max subquery. Revenue summed in DECIMAL so the max-equality
     predicate is exact (a double sum would make `= max` partition-order
     dependent)."""
-    return _sql(spark, sf_dir, _Q15, ["supplier", "lineitem"])
+    return base_sql(spark, sf_dir, ["supplier", "lineitem"], _Q15)
 
 
 _Q18 = """
@@ -251,7 +243,7 @@ def tpch_q18_style(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q18 shape: large-volume orders — HAVING over an exact DECIMAL sum
     (threshold comparisons on double sums are a cross-engine trap), joined
     back to orders+customer."""
-    return _sql(spark, sf_dir, _Q18, ["lineitem", "orders", "customer"])
+    return base_sql(spark, sf_dir, ["lineitem", "orders", "customer"], _Q18)
 
 
 _Q22 = """
@@ -273,4 +265,4 @@ def tpch_q22_style(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q22 shape: rich customers with no large orders — anti-join (NOT EXISTS) +
     scalar-avg threshold. The average is exact-decimal-sum ÷ count cast to
     double — bit-identical across engines, so the > comparison is stable."""
-    return _sql(spark, sf_dir, _Q22, ["customer", "orders"])
+    return base_sql(spark, sf_dir, ["customer", "orders"], _Q22)

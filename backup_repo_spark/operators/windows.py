@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from backup_repo_spark.registry import query
-from backup_repo_spark.session import load_events, load_table
+from backup_repo_spark.session import base_sql, load_events, load_table
 
 
 @query(
@@ -223,8 +223,8 @@ def win_nth_ignorenulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nth_value over a full-partition frame + first_value(... IGNORE
     NULLS) — the 'first non-null observation per entity' pattern (forward-
     fill's core primitive). Same windowed-SQL text runs on both engines."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
+    return base_sql(
+        spark, sf_dir, ["orders"],
         """
         SELECT o_orderkey, o_custkey,
                nth_value(o_totalprice, 2) OVER w AS second_price,
@@ -260,18 +260,18 @@ def win_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum is order-insensitive too. One shuffle on user_id, sort within
     partitions — at 100 TB this is the keyed-window pattern that scales
     linearly with events per user."""
-    load_events(spark, sf_dir).createOrReplaceTempView("events_wri")
     return spark.sql(
         """
         SELECT user_id,
                date_format(date_trunc('second', ts), 'yyyy-MM-dd HH:mm:ss') AS s,
                count(*) OVER w AS n_1h,
                sum(CAST(round(value * 100) AS BIGINT)) OVER w AS cents_1h
-        FROM events_wri
+        FROM {events}
         WINDOW w AS (PARTITION BY user_id ORDER BY date_trunc('second', ts)
                      RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
         ORDER BY user_id, s
-        """
+        """,
+        events=load_events(spark, sf_dir),
     )
 
 

@@ -194,12 +194,26 @@ def _load_events_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw  # already TimestampType
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all ten tables as temp views (the engine's 'catalog').
+def register_views(spark: SparkSession, sf_dir: str, tables: list[str] = TABLES) -> None:
+    """Register base tables (default: all ten) as temp views under their
+    own names (the engine's 'catalog').
 
     Astro persisted its table↔HBase mapping in a metadata table; for a
     parquet-native engine the parquet footers are the metadata and the
     session catalog is the map.
     """
-    for name in TABLES:
+    for name in tables:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+
+
+def base_sql(
+    spark: SparkSession, sf_dir: str, tables: list[str], text: str, args: dict | None = None
+) -> DataFrame:
+    """``spark.sql(text, args)`` after binding each of ``tables`` under its
+    own name (:func:`register_views`). Base-table names are the only names
+    a key binds in the caller's session. Any other input goes through
+    ``spark.sql(text, **frames)`` as ``{name}``: pyspark binds each frame
+    under a generated name for the analysis and drops it before returning
+    (the text is then a format string, so double any literal brace)."""
+    register_views(spark, sf_dir, tables)
+    return spark.sql(text, args)

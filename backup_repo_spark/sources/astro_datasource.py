@@ -379,7 +379,9 @@ def dsv2_stream_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
         q.awaitTermination()
-    return spark.table(name).orderBy("lang")
+    out = spark.table(name).orderBy("lang")
+    spark.catalog.dropTempView(name)
+    return out
 
 
 @query(

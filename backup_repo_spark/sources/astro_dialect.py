@@ -339,22 +339,23 @@ def ddl_astro_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
     create/load/query path is lossless."""
     dialect = AstroDialect(spark)
     csv_dir = scratch_dir(spark, "ddl_astro_dialect_csv")
+    cust = os.path.basename(dialect.workdir)  # per call, like its workdir
     try:
         load_table(spark, sf_dir, "customer").select(
             "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
         ).write.mode("overwrite").csv(csv_dir)
         dialect.sql(
-            """CREATE TABLE astro_cust (c_custkey BIGINT, c_name STRING,
+            f"""CREATE TABLE {cust} (c_custkey BIGINT, c_name STRING,
                c_nationkey INT, c_acctbal DOUBLE, c_mktsegment STRING,
                PRIMARY KEY (c_custkey))
                MAPPED BY (hb_customer, COLS=[c_name=cf.name, c_nationkey=cf.nat,
                                              c_acctbal=cf.bal, c_mktsegment=cf.seg])"""
         )
-        dialect.sql(f"LOAD PARALL DATA INPATH '{csv_dir}' INTO TABLE astro_cust")
+        dialect.sql(f"LOAD PARALL DATA INPATH '{csv_dir}' INTO TABLE {cust}")
         result = dialect.sql(
-            """SELECT c_mktsegment AS seg, count(*) AS n,
+            f"""SELECT c_mktsegment AS seg, count(*) AS n,
                       round(sum(c_acctbal), 2) AS total_bal
-               FROM astro_cust WHERE c_acctbal > 0
+               FROM {cust} WHERE c_acctbal > 0
                GROUP BY c_mktsegment ORDER BY seg"""
         )
         # Materialize before cleanup deletes the backing files.

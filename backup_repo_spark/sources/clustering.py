@@ -173,23 +173,19 @@ def layout_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT count(*) AS n_rows FROM orders",
 )
 def stats_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANALYZE TABLE → catalog statistics: save orders as a managed table,
-    compute stats, and read the row count back OUT OF THE CATALOG
-    (DESCRIBE EXTENDED), not from the data. The oracle is the true
-    count(*) — the stats the CBO plans 100 TB joins with must equal the
-    data's truth."""
-    tbl = "brs_stats_orders"
-    # a prior session's warehouse dir may linger while the catalog entry
-    # does not — clear both so saveAsTable never hits LOCATION_ALREADY_EXISTS
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    wh = os.path.join(os.getcwd(), "spark-warehouse", tbl)
-    if os.path.isdir(wh):
-        import shutil
-
-        shutil.rmtree(wh)
-    load_table(spark, sf_dir, "orders").write.mode("overwrite").saveAsTable(tbl)
-    spark.sql(f"ANALYZE TABLE {tbl} COMPUTE STATISTICS")
-    desc = spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}")
+    """ANALYZE TABLE → catalog statistics: save orders as an external
+    table under a per-call name, compute stats, and read the row count back
+    OUT OF THE CATALOG (DESCRIBE EXTENDED), not from the data. The oracle
+    is the true count(*) — the stats the CBO plans 100 TB joins with must
+    equal the data's truth."""
+    path = scratch_dir(spark, "stats_analyze")
+    tbl = os.path.basename(path)  # per call, like its directory
+    load_table(spark, sf_dir, "orders").write.saveAsTable(tbl, path=f"{path}/t")
+    try:
+        spark.sql(f"ANALYZE TABLE {tbl} COMPUTE STATISTICS")
+        desc = spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}")
+    finally:
+        spark.sql(f"DROP TABLE {tbl}")
     return (
         desc.filter(F.col("col_name") == "Statistics")
         .select(

@@ -87,7 +87,6 @@ def dml_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     the second write carries only o_orderstatus='F' rows (values shifted
     +100) and replaces exactly that directory; 'O'/'P' partitions keep their
     original files. The read-back aggregate proves both halves."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
@@ -96,7 +95,12 @@ def dml_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     patched = o.filter(F.col("o_orderstatus") == "F").withColumn(
         "o_totalprice", F.col("o_totalprice") + 100.0
     )
-    patched.write.partitionBy("o_orderstatus").mode("overwrite").parquet(out)
+    (
+        patched.write.partitionBy("o_orderstatus")
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(out)
+    )
     back = spark.read.parquet(out)
     return (
         back.groupBy("o_orderstatus")

@@ -22,13 +22,14 @@ distribution so output files are even-sized regardless of skew.
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from backup_repo_spark.registry import query
-from backup_repo_spark.session import load_table, scratch_dir
+from backup_repo_spark.session import base_sql, load_table, scratch_dir
 from backup_repo_spark.sources.catalog import LayoutSpec, read_layout
 
 
@@ -186,22 +187,19 @@ def insert_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a catalog parquet table, then aggregate; oracle is the equivalent
     UNION ALL over the source."""
     out = scratch_dir(spark, "insert_select")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_src")
-    spark.sql("DROP TABLE IF EXISTS brs_insert_tgt")
-    spark.sql(
-        f"CREATE TABLE brs_insert_tgt (o_orderstatus STRING) USING parquet LOCATION '{out}/t'"
-    )
-    spark.sql(
-        "INSERT INTO brs_insert_tgt SELECT o_orderstatus FROM orders_src WHERE o_totalprice > 300000"
-    )
-    spark.sql(
-        "INSERT INTO brs_insert_tgt "
-        "SELECT o_orderstatus FROM orders_src WHERE o_orderpriority = '1-URGENT'"
-    )
-    return spark.sql(
-        "SELECT o_orderstatus, count(*) AS n FROM brs_insert_tgt "
-        "GROUP BY o_orderstatus ORDER BY o_orderstatus"
-    )
+    tgt = os.path.basename(out)  # per call, like its directory
+    o = load_table(spark, sf_dir, "orders")
+    spark.sql(f"CREATE TABLE {tgt} (o_orderstatus STRING) USING parquet LOCATION '{out}/t'")
+    try:
+        for pred in ("o_totalprice > 300000", "o_orderpriority = '1-URGENT'"):
+            spark.sql(f"INSERT INTO {tgt} SELECT o_orderstatus FROM {{o}} WHERE {pred}", o=o)
+        return spark.sql(
+            f"SELECT o_orderstatus, count(*) AS n FROM {tgt} "
+            "GROUP BY o_orderstatus ORDER BY o_orderstatus"
+        )
+    finally:
+        # an external table: its files, and the plan above, outlive the name
+        spark.sql(f"DROP TABLE {tgt}")
 
 
 @query(
@@ -222,19 +220,18 @@ def ddl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     names are a stable public surface), and the inserted row count must
     read back — a catalog/DDL defect turns the gate red."""
     out = scratch_dir(spark, "ddl_roundtrip")
-    spark.sql("DROP TABLE IF EXISTS brs_ddl_tbl")
+    tbl = os.path.basename(out)  # per call, like its directory
     spark.sql(
-        "CREATE TABLE brs_ddl_tbl (k BIGINT, name STRING, price DOUBLE) "
+        f"CREATE TABLE {tbl} (k BIGINT, name STRING, price DOUBLE) "
         f"USING parquet LOCATION '{out}/t'"
     )
-    spark.sql("INSERT INTO brs_ddl_tbl VALUES (1, 'alpha', 1.5), (2, 'beta', 2.5)")
-    described = spark.sql("DESCRIBE TABLE brs_ddl_tbl").select("col_name", "data_type")
-    n = spark.sql("SELECT count(*) AS n FROM brs_ddl_tbl")
-    result = described.withColumn("n_rows", F.lit(n.collect()[0][0]).cast("bigint"))
-    # Materialize before dropping the table the plan reads from.
-    result = spark.createDataFrame(result.collect(), result.schema)
-    spark.sql("DROP TABLE IF EXISTS brs_ddl_tbl")
-    return result
+    try:
+        spark.sql(f"INSERT INTO {tbl} VALUES (1, 'alpha', 1.5), (2, 'beta', 2.5)")
+        described = spark.sql(f"DESCRIBE TABLE {tbl}").select("col_name", "data_type")
+        n = spark.sql(f"SELECT count(*) AS n FROM {tbl}").collect()[0][0]
+        return described.withColumn("n_rows", F.lit(n).cast("bigint"))
+    finally:
+        spark.sql(f"DROP TABLE {tbl}")
 
 
 @query(
@@ -251,41 +248,33 @@ def bulk_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout, as Spark bucketing); the join then needs NO exchange on either
     side (asserted in tests/test_plans.py). At 100 TB this converts the
     biggest shuffle in the workload into a zero-network merge."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    spark.sql("DROP TABLE IF EXISTS brs_li_bucketed")
-    spark.sql("DROP TABLE IF EXISTS brs_o_bucketed")
-    # The in-memory catalog forgets managed tables across sessions but their
-    # warehouse directories persist — remove them or CREATE fails with
-    # LOCATION_ALREADY_EXISTS.
-    import shutil
-    from urllib.parse import urlparse
+    def bucketed(df: DataFrame, key: str) -> tuple[str, DataFrame]:
+        # an external table under a per-call name: only the catalog entry
+        # carries the bucket spec, and DROP TABLE leaves the files the
+        # plan reads
+        path = scratch_dir(spark, "bulk_bucketed_join")
+        tbl = os.path.basename(path)
+        df.write.bucketBy(8, key).sortBy(key).saveAsTable(tbl, path=f"{path}/t")
+        return tbl, spark.table(tbl)
 
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for tbl in ("brs_li_bucketed", "brs_o_bucketed"):
-        shutil.rmtree(os.path.join(warehouse, tbl), ignore_errors=True)
-    (
-        li.select("l_orderkey", "l_extendedprice")
-        .write.bucketBy(8, "l_orderkey")
-        .sortBy("l_orderkey")
-        .mode("overwrite")
-        .saveAsTable("brs_li_bucketed")
+    li_tbl, lb = bucketed(
+        load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice"),
+        "l_orderkey",
     )
-    (
-        o.select("o_orderkey", "o_orderstatus")
-        .write.bucketBy(8, "o_orderkey")
-        .sortBy("o_orderkey")
-        .mode("overwrite")
-        .saveAsTable("brs_o_bucketed")
+    o_tbl, ob = bucketed(
+        load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus"),
+        "o_orderkey",
     )
-    lb = spark.table("brs_li_bucketed")
-    ob = spark.table("brs_o_bucketed").hint("merge")
-    return (
-        lb.join(ob, lb.l_orderkey == ob.o_orderkey)
-        .groupBy("o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("l_extendedprice"), 2).alias("total"))
-        .orderBy("o_orderstatus")
-    )
+    try:
+        return (
+            lb.join(ob.hint("merge"), lb.l_orderkey == ob.o_orderkey)
+            .groupBy("o_orderstatus")
+            .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("l_extendedprice"), 2).alias("total"))
+            .orderBy("o_orderstatus")
+        )
+    finally:
+        for tbl in (li_tbl, o_tbl):
+            spark.sql(f"DROP TABLE {tbl}")
 
 
 @query(
@@ -325,16 +314,17 @@ def ddl_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CREATE VIEW DDL (A7 family): a named SQL view over a base view,
     queried through the catalog — logical-only (no materialization), the
     plan inlines the view body and pushdown still reaches the scan."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    spark.sql(
-        """
-        CREATE OR REPLACE TEMP VIEW brs_big_orders AS
-        SELECT * FROM orders WHERE o_totalprice > 100000
-        """
+    view = f"brs_big_orders_{uuid.uuid4().hex[:12]}"
+    base_sql(
+        spark, sf_dir, ["orders"],
+        f"CREATE TEMP VIEW {view} AS SELECT * FROM orders WHERE o_totalprice > 100000",
     )
-    return spark.sql(
-        """
-        SELECT o_orderstatus, count(*) AS n, round(avg(o_totalprice), 2) AS avg_price
-        FROM brs_big_orders GROUP BY o_orderstatus ORDER BY o_orderstatus
-        """
-    )
+    try:
+        return spark.sql(
+            f"""
+            SELECT o_orderstatus, count(*) AS n, round(avg(o_totalprice), 2) AS avg_price
+            FROM {view} GROUP BY o_orderstatus ORDER BY o_orderstatus
+            """
+        )
+    finally:
+        spark.catalog.dropTempView(view)

@@ -93,7 +93,8 @@ def _stream_events_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _run_to_table(df: DataFrame, mode: str) -> DataFrame:
     """Execute a streaming DataFrame to completion into a memory sink and
-    return the sink contents."""
+    return the sink contents. The sink's view is unregistered once read:
+    the returned plan holds the rows, and they go when it does."""
     name = f"brs_sink_{uuid.uuid4().hex[:12]}"
     ckpt = scratch_dir(df.sparkSession, "stream_ckpt")
     q = (
@@ -105,7 +106,9 @@ def _run_to_table(df: DataFrame, mode: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return df.sparkSession.table(name)
+    out = df.sparkSession.table(name)
+    df.sparkSession.catalog.dropTempView(name)
+    return out
 
 
 @query(
@@ -337,12 +340,10 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     scrapes for lag/throughput; exactly-once input accounting is the
     invariant that makes those dashboards trustworthy."""
     ev = _stream_events(spark, sf_dir)
-    name = f"brs_prog_{uuid.uuid4().hex[:8]}"
     q = (
         ev.groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
-        .writeStream.format("memory")
-        .queryName(name)
+        .writeStream.format("noop")
         .outputMode("complete")
         .option("checkpointLocation", scratch_dir(spark, "stream_progress_metrics_ckpt"))
         .trigger(availableNow=True)
@@ -644,7 +645,6 @@ def stream_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming twin of `dml_partition_overwrite`, and the reason continuous
     aggregates beat re-running the rollup: the rollup table is
     |hours × types|-sized while the input is unbounded."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     ev = _stream_events_multibatch(spark, sf_dir).select(
         F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd-HH").alias("hr"),
         "event_type",
@@ -670,7 +670,12 @@ def stream_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         # dynamic overwrite: only the hour partitions present in `delta`
         # are replaced; untouched hours keep their files.
-        delta.write.mode("overwrite").partitionBy("hr").parquet(out)
+        (
+            delta.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("hr")
+            .parquet(out)
+        )
         wrote["any"] = True
 
     q = (

@@ -23,7 +23,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf, udf
 
 from backup_repo_spark.registry import query
-from backup_repo_spark.session import load_table
+from backup_repo_spark.session import base_sql, load_table
 
 
 @query(
@@ -312,8 +312,8 @@ def udtf_polymorphic(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield tuple(toks + [None] * (k - len(toks)))
 
     spark.udtf.register("first_k", FirstK)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(
+    return base_sql(
+        spark, sf_dir, ["documents"],
         """
         SELECT d.doc_id, t.tok_0, t.tok_1, t.tok_2
         FROM documents d, LATERAL first_k(d.text, 3) t
@@ -422,21 +422,24 @@ def udtf_table_arg(spark: SparkSession, sf_dir: str) -> DataFrame:
             self.biggest = max(self.biggest, row["o_totalprice"])
 
         def terminate(self):  # noqa: ANN202
-            yield self.status, self.n, round(self.total, 2), round(self.biggest, 2)
+            # a partition with no rows still gets terminate(); a row from
+            # it crashes EvalPythonUDTFExec (NPE in JoinedRow.isNullAt)
+            if self.n:
+                yield self.status, self.n, round(self.total, 2), round(self.biggest, 2)
 
     spark.udtf.register("brs_status_stats", StatusStats)
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_udtf")
     # r13 (guide §4.1): pass only the two columns eval() reads. A bare
-    # TABLE(orders_udtf) ships every orders column through the partition
+    # TABLE(orders) ships every orders column through the partition
     # shuffle and the pickled-row boundary; the engine cannot prune what
     # the Python class touches.
     return spark.sql(
         """
         SELECT status, n, total, biggest
         FROM brs_status_stats(
-            TABLE(SELECT o_orderstatus, o_totalprice FROM orders_udtf)
+            TABLE(SELECT o_orderstatus, o_totalprice FROM {orders})
             PARTITION BY o_orderstatus)
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

@@ -40,14 +40,25 @@ def test_concurrent_queries_share_one_session(spark):
 
 
 @pytest.mark.parametrize(
-    "key", ["dml_upsert", "ingest_schema_evolution", "dsv2_write_roundtrip"]
+    "key",
+    [
+        "dml_upsert",
+        "ingest_schema_evolution",
+        "dsv2_write_roundtrip",
+        "insert_select",
+        "ddl_roundtrip",
+        "bulk_bucketed_join",
+        "stats_analyze",
+    ],
 )
 def test_same_writer_key_from_four_threads(spark, key):
     """One writer key run from four threads at once on the shared session.
     Each call must write its own scratch directory (a shared one fails with
-    ``_temporary/0: No such file or directory``), and the connector key
-    must resolve its data source off the thread that built the session
-    (else DATA_SOURCE_NOT_FOUND). Every result must equal the serial one."""
+    ``_temporary/0: No such file or directory``) and name its own catalog
+    tables and views (a shared name fails with TABLE_OR_VIEW_ALREADY_EXISTS
+    or reads another thread's rows), and the connector key must resolve
+    its data source off the thread that built the session (else
+    DATA_SOURCE_NOT_FOUND). Every result must equal the serial one."""
     serial = registry.QUERIES[key](spark, SF_DIR).toPandas()
 
     def run(_: int):
@@ -57,6 +68,24 @@ def test_same_writer_key_from_four_threads(spark, key):
         parallel = list(pool.map(run, range(4)))
     for pdf in parallel:
         assert not hard_problems(compare(pdf, serial))
+
+
+def test_udtf_table_arg_on_the_bench_profile(spark, duck):
+    """The bench profile (AQE off, 8 shuffle partitions) leaves some of the
+    UDTF's PARTITION BY partitions empty. terminate() runs for those too
+    and must emit nothing: a row from an empty partition crashed
+    EvalPythonUDTFExec with a NullPointerException."""
+    profile = {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": "8"}
+    old = {k: spark.conf.get(k) for k in profile}
+    try:
+        for k, v in profile.items():
+            spark.conf.set(k, v)
+        got = registry.QUERIES["udtf_table_arg"](spark, SF_DIR).toPandas()
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    want = duck.execute(registry.ORACLES["udtf_table_arg"]).fetchdf()
+    assert not hard_problems(compare(got, want))
 
 
 def test_bad_sf_dir_fails_cleanly(spark):

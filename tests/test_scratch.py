@@ -1,7 +1,8 @@
 """Scratch output has one owner: ``session.scratch_dir``. Keys that write
 do so under the SparkContext's own root, which Spark deletes when the
 session stops, so no key hand-rolls a temp path and nothing outlives the
-session."""
+session. Nor does a key change the caller's session: it binds no name but
+a base table's, sets no conf and writes nothing to the warehouse."""
 
 from __future__ import annotations
 
@@ -69,16 +70,56 @@ _KEYS = [
     "stream_watermark",
     "stream_file_sink",
     "stream_cdc_apply",
+    # with dsv2_stream_read and stream_watermark above: keys that name a
+    # catalog table, a view or a memory sink, or need a writer conf, none
+    # of which the caller's session may keep
+    "llm_contamination",
+    "events_scd2",
+    "events_attribution",
+    "win_range_interval",
+    "agg_bitmap_distinct",
+    "udtf_table_arg",
+    "fn_url",
+    "sql_identifier_clause",
+    "ddl_view",
+    "insert_select",
+    "bulk_bucketed_join",
+    "stats_analyze",
+    # ahead of dml_partition_overwrite, which needs the same writer conf,
+    # so each is checked against an unchanged SET
+    "stream_continuous_aggregate",
+    "dml_partition_overwrite",
+    "stream_dedup",
+    "stream_static_join",
+    "stream_stateful",
+    "stream_stream_join",
+    "stream_stream_outer",
+    "stream_session_live",
+    "stream_dedup_against_corpus",
+    "stream_progress_metrics",
 ]
 
 _CHILD = """
 import os, sys
 from backup_repo_spark import registry
-from backup_repo_spark.session import get_spark
+from backup_repo_spark.session import TABLES, get_spark
 
 spark = get_spark("scratch-test", shuffle_partitions=4)
+
+def state():
+    return {
+        "TABLE": {t.name for t in spark.catalog.listTables()} - set(TABLES),
+        "SET": {tuple(r) for r in spark.sql("SET").collect()},
+        "WAREHOUSE": set(os.listdir("spark-warehouse"))
+        if os.path.isdir("spark-warehouse") else set(),
+    }
+
 for key in sys.argv[1].split(","):
+    before = state()
     registry.QUERIES[key](spark, sys.argv[2]).collect()
+    for kind, now in state().items():
+        for entry in sorted(map(str, now ^ before[kind])):
+            print("CHANGED", key, kind, entry)
 spark.stop()
 for root, _, files in os.walk(sys.argv[3]):
     for f in files:
@@ -90,7 +131,9 @@ def test_key_output_is_gone_once_the_session_stops(tmp_path):
     """Run the keys in a fresh session with TMPDIR, SPARK_LOCAL_DIRS and the
     cwd under ``tmp_path``, stop it, and list what is left before the JVM
     exits: no file may remain there, and the repo's ``spark-warehouse/``
-    gains nothing but the layout catalog."""
+    gains nothing but the layout catalog. Around each key the child also
+    compares the session's non-base tables and views, its ``SET`` entries
+    and the cwd's ``spark-warehouse/``: none may change."""
     warehouse = os.path.join(_REPO, "spark-warehouse")
 
     def entries():
@@ -112,6 +155,8 @@ def test_key_output_is_gone_once_the_session_stops(tmp_path):
         cwd=cwd, env=env, capture_output=True, text=True, timeout=600,
     )
     assert run.returncode == 0, run.stderr[-3000:]
+    changed = [line for line in run.stdout.splitlines() if line.startswith("CHANGED ")]
+    assert not changed, "\n".join(changed[:40])
     left = [line for line in run.stdout.splitlines() if line.startswith("LEFT ")]
     assert not left, "\n".join(left[:20])
     assert entries() - before <= {"layout_catalog"}, sorted(entries() - before)
