@@ -1669,10 +1669,9 @@ def llm_lsh_salt_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- stage builders -------------------------------------------------------
 # These two ARE llm_lsh_salt_plan's pipeline (the key above only composes
-# them); tools/saltplan_stage_probe.py times the same builders with stage
-# barriers, so the probe cannot drift from the shipped expressions (the
-# ADVICE-r11 pq_stage_probe principle applied to the planner's
-# above-generator octave stamp — VERDICT r11 #5).
+# them). The retired saltplan_stage_probe timed these same builders with
+# stage barriers (OCTAVE_r12_saltplanstages.json, SCALING.md round 12;
+# README "Retired probes").
 
 
 def salt_plan_cob(spark, sf_dir: str):

@@ -226,9 +226,9 @@ def llm_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- stage builders -------------------------------------------------------
 # These four ARE llm_pq_search's pipeline (the key above only composes
-# them); tools/pq_stage_probe.py times the same builders with stage
-# barriers, so the probe cannot drift from the shipped expressions
-# (ADVICE r11).
+# them). The retired pq_stage_probe timed these same builders with stage
+# barriers (OCTAVE_r11_pqstages.json, SCALING.md round 11; README
+# "Retired probes").
 
 
 def pq_dist(subv: DataFrame, cent: DataFrame) -> DataFrame:

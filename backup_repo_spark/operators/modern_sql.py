@@ -12,6 +12,8 @@ sort-by-count at scale.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -155,16 +157,19 @@ def sql_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     state referenced directly in queries — the clean replacement for
     string-formatting thresholds into SQL text. The variable is resolved
     at plan time, so the filter still pushes down to the scan."""
-    spark.sql("DECLARE OR REPLACE VARIABLE price_floor DOUBLE DEFAULT 0.0")
-    spark.sql("SET VAR price_floor = 250000.0")
-    return base_sql(
+    var = f"price_floor_{uuid.uuid4().hex}"  # per call, so threads never share it
+    spark.sql(f"DECLARE VARIABLE {var} DOUBLE DEFAULT 0.0")
+    spark.sql(f"SET VAR {var} = 250000.0")
+    df = base_sql(
         spark, sf_dir, ["orders"],
-        """
+        f"""
         SELECT o_orderstatus, count(*) AS n
-        FROM orders WHERE o_totalprice > price_floor
+        FROM orders WHERE o_totalprice > {var}
         GROUP BY o_orderstatus ORDER BY o_orderstatus
         """
     )
+    spark.sql(f"DROP TEMPORARY VARIABLE {var}")  # the analysed plan holds its value
+    return df
 
 
 @query(
@@ -183,21 +188,24 @@ def sql_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage codegen, no serialization boundary). The right default for
     shared business logic at 100 TB; the oracle inlines the same expression
     by hand."""
+    fn = f"disc_price_{uuid.uuid4().hex}"  # per call, so threads never share it
     spark.sql(
-        """
-        CREATE OR REPLACE TEMPORARY FUNCTION disc_price(p DOUBLE, d DOUBLE)
+        f"""
+        CREATE TEMPORARY FUNCTION {fn}(p DOUBLE, d DOUBLE)
         RETURNS DOUBLE RETURN p * (1.0 - d)
         """
     )
-    return base_sql(
+    df = base_sql(
         spark, sf_dir, ["lineitem"],
-        """
+        f"""
         SELECT l_returnflag, count(*) AS n,
-               CAST(sum(CAST(disc_price(l_extendedprice, l_discount)
+               CAST(sum(CAST({fn}(l_extendedprice, l_discount)
                              AS DECIMAL(18,4))) AS DOUBLE) AS disc_revenue
         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
         """
     )
+    spark.sql(f"DROP TEMPORARY FUNCTION {fn}")  # the analysed plan inlines it
+    return df
 
 
 @query(

@@ -13,6 +13,7 @@ path (serialization boundary, batch shape), not novel math.
 
 from __future__ import annotations
 
+import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -311,15 +312,18 @@ def udtf_polymorphic(spark: SparkSession, sf_dir: str) -> DataFrame:
             toks = (text or "").split(" ")[:k]
             yield tuple(toks + [None] * (k - len(toks)))
 
-    spark.udtf.register("first_k", FirstK)
-    return base_sql(
+    fn = f"first_k_{uuid.uuid4().hex}"  # per call, so threads never share it
+    spark.udtf.register(fn, FirstK)
+    df = base_sql(
         spark, sf_dir, ["documents"],
-        """
+        f"""
         SELECT d.doc_id, t.tok_0, t.tok_1, t.tok_2
-        FROM documents d, LATERAL first_k(d.text, 3) t
+        FROM documents d, LATERAL {fn}(d.text, 3) t
         ORDER BY d.doc_id LIMIT 200
         """
     )
+    spark.sql(f"DROP TEMPORARY FUNCTION {fn}")  # the analysed plan holds the UDTF
+    return df
 
 
 @query(
@@ -427,20 +431,23 @@ def udtf_table_arg(spark: SparkSession, sf_dir: str) -> DataFrame:
             if self.n:
                 yield self.status, self.n, round(self.total, 2), round(self.biggest, 2)
 
-    spark.udtf.register("brs_status_stats", StatusStats)
+    fn = f"brs_status_stats_{uuid.uuid4().hex}"  # per call, so threads never share it
+    spark.udtf.register(fn, StatusStats)
     # r13 (guide §4.1): pass only the two columns eval() reads. A bare
     # TABLE(orders) ships every orders column through the partition
     # shuffle and the pickled-row boundary; the engine cannot prune what
     # the Python class touches.
-    return spark.sql(
-        """
+    df = spark.sql(
+        f"""
         SELECT status, n, total, biggest
-        FROM brs_status_stats(
-            TABLE(SELECT o_orderstatus, o_totalprice FROM {orders})
+        FROM {fn}(
+            TABLE(SELECT o_orderstatus, o_totalprice FROM {{orders}})
             PARTITION BY o_orderstatus)
         """,
         orders=load_table(spark, sf_dir, "orders"),
     )
+    spark.sql(f"DROP TEMPORARY FUNCTION {fn}")  # the analysed plan holds the UDTF
+    return df
 
 
 @query(

@@ -1,9 +1,10 @@
 """CI gate for the registry-wide plan sweep: any NEW CartesianProduct,
 non-whitelisted BroadcastNestedLoopJoin, OR non-whitelisted unpartitioned
 Window (the single-task funnel hazard) in any batch key's physical plan
-fails this test (tools/plan_sweep.py is the same logic as a reportable
-CLI; PLAN_AUDIT.md is its committed artifact).  Marked slow (~2-3 min:
-builds all batch plans, executes nothing).
+fails this test, and so does a plan that fails to build. The test and
+tools/plan_sweep.py's report (PLAN_AUDIT.md) share one classifier,
+``plan_sweep.audit``.  Marked slow (~2-3 min: builds all batch plans,
+executes nothing).
 """
 
 from __future__ import annotations
@@ -12,9 +13,7 @@ import pytest
 
 from backup_repo_spark import registry
 from tools.plan_sweep import (
-    SKIP_PREFIXES,
-    WHITELIST,
-    WINDOW_WHITELIST,
+    audit,
     plan_of,
     split_auto_safe_windows,
     unpartitioned_windows,
@@ -25,23 +24,10 @@ from tests.conftest import SF_DIR
 
 @pytest.mark.slow
 def test_no_unexplained_quadratic_joins_or_global_windows(spark):
-    flagged = {}
-    for name in sorted(registry.QUERIES):
-        if name.startswith(SKIP_PREFIXES):
-            continue
-        plan = plan_of(registry.QUERIES[name](spark, SF_DIR))
-        hits = []
-        if name not in WHITELIST:
-            if "CartesianProduct" in plan:
-                hits.append("CartesianProduct")
-            # per-NODE BNLJ rule: only 1-row/constant build sides auto-pass
-            hits.extend(f"BNLJ[{u}]" for u in unsafe_bnlj_nodes(plan))
-        if name not in WINDOW_WHITELIST:
-            wins, _ = split_auto_safe_windows(unpartitioned_windows(plan))
-            hits.extend(f"unpartitioned Window [{w}]" for w in wins)
-        if hits:
-            flagged[name] = hits
-    assert not flagged, f"scale anti-patterns without whitelist entry: {flagged}"
+    r = audit(spark, SF_DIR)
+    assert not r["errors"], f"plans that failed to build: {r['errors']}"
+    flagged = (r["flagged"], r["win_flagged"])
+    assert flagged == ({}, {}), f"scale anti-patterns without whitelist entry: {flagged}"
 
 
 def test_sweep_is_cache_robust_after_materialization(spark):

@@ -1,7 +1,7 @@
-"""Unit tests for scale_sweep's regression-reprobe selection — the pure
-half of the --reprobe-regressions protocol (VERDICT r7 #6). No Spark
-session needed; the measurement half is exercised by the per-round sweep
-itself (SCALESWEEP_r{N}.json's `reprobe` stamp).
+"""Unit tests for scale_sweep's pure record rules: which keys the noop-sink
+exoneration re-measures, and how a --merge-into run carries the base
+record's noop stamps. No Spark session needed; the measurement half is
+exercised by the sweep itself (SCALESWEEP_r{N}.json).
 """
 
 from __future__ import annotations
@@ -11,39 +11,7 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
 
-from scale_sweep import _regressed_keys  # noqa: E402
-
-
-def test_flags_doubled_ratio_only():
-    prior = {"a": {"ratio": 3.0}, "b": {"ratio": 5.0}, "c": {"ratio": 2.0}}
-    now = {"a": {"ratio": 6.0}, "b": {"ratio": 9.9}, "c": {"ratio": 3.9}}
-    # a doubled exactly (>= 2x flags), b rose 1.98x (under), c rose 1.95x
-    assert _regressed_keys(now, prior) == ["a"]
-
-
-def test_skips_keys_without_comparable_ratios():
-    prior = {"a": {"ratio": 3.0}, "e": {"err": "boom"}}
-    now = {
-        "a": {"err": "boom"},        # errored this sweep: nothing to re-probe
-        "d": {"ratio": 50.0},        # new key, no prior record: not a regression
-        "e": {"ratio": 4.0},         # prior errored: no baseline to double
-    }
-    assert _regressed_keys(now, prior) == []
-
-
-def test_sorted_and_factor_override():
-    prior = {"x": {"ratio": 1.0}, "y": {"ratio": 1.0}}
-    now = {"y": {"ratio": 1.6}, "x": {"ratio": 1.7}}
-    assert _regressed_keys(now, prior, factor=1.5) == ["x", "y"]
-    assert _regressed_keys(now, prior) == []
-
-
-from scale_sweep import (  # noqa: E402
-    OCTAVE_GENERATORS,
-    _latest_prior_record,
-    _noop_candidates,
-    _octave_plan,
-)
+from scale_sweep import _merge_stamps, _noop_candidates  # noqa: E402
 
 
 def test_noop_candidates_selects_over_8x_without_err_or_stamp():
@@ -58,134 +26,25 @@ def test_noop_candidates_selects_over_8x_without_err_or_stamp():
     assert _noop_candidates(results, threshold=5.0) == ["big_collect", "edge", "fine"]
 
 
-def test_octave_plan_maps_dependents_to_generators():
-    keys = ["llm_dup_source_matrix", "llm_dedup_drop_rate"]
-    gens, dep_to_gen = _octave_plan(keys)
-    assert gens == ["llm_dedup_minhash_banded"]
-    assert dep_to_gen == {k: "llm_dedup_minhash_banded" for k in keys}
-
-
-def test_octave_plan_generator_in_keys_not_double_measured():
-    keys = ["llm_dedup_minhash_banded", "llm_dup_cluster_profile"]
-    gens, dep_to_gen = _octave_plan(keys)
-    assert gens == []  # generator measured as a requested key, not twice
-    assert dep_to_gen == {"llm_dup_cluster_profile": "llm_dedup_minhash_banded"}
-
-
-def test_octave_plan_rejects_unknown_keys():
-    import pytest
-    with pytest.raises(SystemExit):
-        _octave_plan(["no_such_key"])
-
-
-def test_octave_generators_all_registered():
-    from backup_repo_spark import registry
-    missing = [
-        k for pair in OCTAVE_GENERATORS.items() for k in pair
-        if k not in registry.QUERIES
-    ]
-    assert not missing
-
-
-def test_latest_prior_record_sorts_by_round_and_excludes_self(tmp_path, monkeypatch):
-    """ADVICE r8: a re-run of the current round must not compare against
-    its own already-committed record, and r9 vs r10 must sort numerically
-    (lexicographic would pick r9)."""
-    import scale_sweep
-    monkeypatch.setattr(scale_sweep, "_REPO", str(tmp_path))
-    (tmp_path / "SCALESWEEP_r08.json").write_text("{}")
-    (tmp_path / "SCALESWEEP_r9.json").write_text("{}")   # unpadded round 9
-    (tmp_path / "SCALESWEEP_r10.json").write_text("{}")
-    got = _latest_prior_record()  # lexicographic would pick r9
-    assert got is not None and got.endswith("SCALESWEEP_r10.json")
-    got = _latest_prior_record(exclude="SCALESWEEP_r10.json")
-    assert got is not None and got.endswith("SCALESWEEP_r9.json")
-    got = _latest_prior_record(exclude=str(tmp_path / "SCALESWEEP_r10.json"))
-    assert got is not None and got.endswith("SCALESWEEP_r9.json")
-
-
 def test_merge_stamps_preserves_full_run_adjudication():
-    """round 9: a --keys --merge-into re-measure produced an empty reprobe
-    ({'prior': <itself>, 'keys': []}) and no noop list, and rewrote the
-    record WITHOUT the full sweep's stamps — erasing the very
-    self-adjudication the record exists to carry. The merge rule must
-    carry the prior record's stamps forward and union any new ones."""
-    from scale_sweep import _merge_stamps
-
-    prior = {
-        "reprobe": {"prior": "SCALESWEEP_r08.json", "keys": ["a", "b"]},
-        "noop_exonerated": ["x", "y"],
-    }
+    """round 9: a --keys --merge-into re-measure rewrote the record with
+    no noop list, erasing the full sweep's noop adjudication. The merge
+    rule must carry the base record's stamps forward and union any new
+    ones."""
+    prior = {"noop_exonerated": ["x", "y"]}
     # merge run adjudicated nothing (the common single-key re-measure)
-    rp, noop = _merge_stamps(prior, {"prior": "SCALESWEEP_r09.json", "keys": []}, None)
-    assert rp == prior["reprobe"]
-    assert noop == ["x", "y"]
-    # merge run adjudicated something of its own: both stamps kept, each
-    # attributed to ITS OWN prior anchor (never a false cross-attribution)
-    rp, noop = _merge_stamps(
-        prior, {"prior": "SCALESWEEP_r09.json", "keys": ["c"]}, ["z"]
-    )
-    assert rp == {
-        "prior": "SCALESWEEP_r09.json",
-        "keys": ["c"],
-        "carried": {"prior": "SCALESWEEP_r08.json", "keys": ["a", "b"]},
-    }
-    assert noop == ["x", "y", "z"]
+    assert _merge_stamps(prior, None, set()) == ["x", "y"]
+    # merge run adjudicated something of its own: both kept
+    assert _merge_stamps(prior, ["z"], set()) == ["x", "y", "z"]
     # no prior stamps at all: the merge run's own stamps pass through
-    rp, noop = _merge_stamps({}, None, ["z"])
-    assert rp is None and noop == ["z"]
+    assert _merge_stamps({}, ["z"], set()) == ["z"]
 
 
 def test_merge_stamps_drops_adjudications_of_remeasured_keys():
     """A key the merge run itself re-measured has a brand-new entry — the
-    prior record's reprobe/noop adjudication no longer describes it and
-    must not be carried forward; a prior 'skipped' marker survives."""
-    from scale_sweep import _merge_stamps
-
-    prior = {
-        "reprobe": {"prior": "SCALESWEEP_r08.json", "keys": ["a", "b"]},
-        "noop_exonerated": ["a", "x"],
-    }
-    rp, noop = _merge_stamps(prior, None, None, remeasured={"a"})
-    assert rp == {"prior": "SCALESWEEP_r08.json", "keys": ["b"]}
-    assert noop == ["x"]
-    # every previously-stamped key re-measured: nothing left to carry
-    rp, noop = _merge_stamps(prior, None, ["a"], remeasured={"a", "b", "x"})
-    assert rp is None
-    assert noop == ["a"]
-    # a 'skipped' reprobe stamp (no comparable prior was found) carries
-    prior2 = {"reprobe": {"prior": None, "skipped": "protocol mismatch"}}
-    rp, _ = _merge_stamps(prior2, {"prior": "p", "keys": ["c"]}, None, {"c"})
-    assert rp["keys"] == ["c"]
-    assert rp["carried"] == prior2["reprobe"]
-
-
-def test_octave_verdict_rule():
-    """round 9: cluster_profile's octave step read 14% above its generator
-    in two independent sessions, yet its 50x ABSOLUTE time was within 4-10%
-    of the generator it wholly contains — the step was a small-base
-    artifact. The verdict rule encodes that adjudication: step at/below
-    generator passes outright; step above with a flat absolute gap is
-    exonerated; only step above AND a widening gap flags (and the octave
-    mode then re-probes it in-session)."""
-    from scale_sweep import _octave_verdict
-
-    gen = {"base": 17.7, "scaled": 81.7, "step": 4.61}
-    # at/below generator step AND flat gap: clean pass, gap stamped
-    v = _octave_verdict({"base": 19.2, "scaled": 88.0, "step": 4.58}, gen)
-    assert v["verdict"] == "at-or-below-generator"
-    assert v["gap50_pct"] <= 10
-    # above on step, flat on absolute gap (the cluster_profile case)
-    v = _octave_verdict({"base": 17.1, "scaled": 89.8, "step": 5.25}, gen)
-    assert v["verdict"] == "flat-absolute-gap"
-    assert v["gap50_pct"] == 9.9
-    # above on both: flagged (octave mode re-probes this in-session)
-    v = _octave_verdict({"base": 17.1, "scaled": 120.0, "step": 7.02}, gen)
-    assert v["verdict"] == "above-generator"
-    assert v["gap50_pct"] > 10
-    # ADVICE r9: a passing step minted by a contention-inflated 10x base
-    # (step <= generator, but the 50x absolute gap exceeds tolerance) must
-    # NOT stamp a clean pass — it gets its own verdict (and a re-probe)
-    v = _octave_verdict({"base": 25.0, "scaled": 95.0, "step": 3.80}, gen)
-    assert v["verdict"] == "step-pass-gap-wide"
-    assert v["gap50_pct"] > 10
+    base record's noop adjudication no longer describes it and must not
+    be carried forward."""
+    prior = {"noop_exonerated": ["a", "x"]}
+    assert _merge_stamps(prior, None, {"a"}) == ["x"]
+    # every previously-stamped key re-measured: only the run's own stamps
+    assert _merge_stamps(prior, ["a"], {"a", "b", "x"}) == ["a"]

@@ -97,6 +97,11 @@ _KEYS = [
     "stream_session_live",
     "stream_dedup_against_corpus",
     "stream_progress_metrics",
+    # a session variable, a SQL function and a Python UDTF, which neither
+    # listTables() nor SET shows (udtf_table_arg above registers one too)
+    "sql_session_variables",
+    "sql_scalar_udf",
+    "udtf_polymorphic",
 ]
 
 _CHILD = """
@@ -106,10 +111,14 @@ from backup_repo_spark.session import TABLES, get_spark
 
 spark = get_spark("scratch-test", shuffle_partitions=4)
 
+variables = spark._jsparkSession.sessionState().catalogManager().tempVariableManager()
+
 def state():
     return {
         "TABLE": {t.name for t in spark.catalog.listTables()} - set(TABLES),
         "SET": {tuple(r) for r in spark.sql("SET").collect()},
+        "VARIABLE": set() if variables.isEmpty() else {"declared"},
+        "FUNCTION": {r[0] for r in spark.sql("SHOW USER FUNCTIONS").collect()},
         "WAREHOUSE": set(os.listdir("spark-warehouse"))
         if os.path.isdir("spark-warehouse") else set(),
     }
@@ -132,8 +141,9 @@ def test_key_output_is_gone_once_the_session_stops(tmp_path):
     cwd under ``tmp_path``, stop it, and list what is left before the JVM
     exits: no file may remain there, and the repo's ``spark-warehouse/``
     gains nothing but the layout catalog. Around each key the child also
-    compares the session's non-base tables and views, its ``SET`` entries
-    and the cwd's ``spark-warehouse/``: none may change."""
+    compares the session's non-base tables and views, its ``SET`` entries,
+    whether it holds a session variable, its user functions and the cwd's
+    ``spark-warehouse/``: none may change."""
     warehouse = os.path.join(_REPO, "spark-warehouse")
 
     def entries():

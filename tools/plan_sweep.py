@@ -251,8 +251,12 @@ def split_auto_safe_windows(orders: list[str]) -> tuple[list[str], int]:
     return unsafe, len(orders) - len(unsafe)
 
 
-def main() -> None:
-    spark = get_spark("plan-sweep", shuffle_partitions=4)
+def audit(spark, sf_dir: str) -> dict:
+    """Build every batch key's plan and classify its quadratic joins and
+    unpartitioned windows. Returns the keys per class (``flagged`` and
+    ``win_flagged`` are the non-whitelisted ones), ``n_win_auto``,
+    ``n_checked`` and ``errors`` (one line per key whose plan failed to
+    build)."""
     flagged: dict[str, list[str]] = {}
     whitelisted: dict[str, list[str]] = {}
     auto: dict[str, list[str]] = {}
@@ -265,7 +269,7 @@ def main() -> None:
         if name.startswith(SKIP_PREFIXES):
             continue
         try:
-            plan = plan_of(registry.QUERIES[name](spark, SF_DIR))
+            plan = plan_of(registry.QUERIES[name](spark, sf_dir))
         except Exception:
             errors.append(f"{name}: {traceback.format_exc(limit=0).splitlines()[-1]}")
             continue
@@ -291,6 +295,19 @@ def main() -> None:
             (win_whitelisted if name in WINDOW_WHITELIST else win_flagged)[
                 name
             ] = wins
+    return {
+        "flagged": flagged, "whitelisted": whitelisted, "auto": auto,
+        "win_flagged": win_flagged, "win_whitelisted": win_whitelisted,
+        "n_win_auto": n_win_auto, "errors": errors, "n_checked": n_checked,
+    }
+
+
+def main() -> None:
+    spark = get_spark("plan-sweep", shuffle_partitions=4)
+    r = audit(spark, SF_DIR)
+    flagged, whitelisted, auto = r["flagged"], r["whitelisted"], r["auto"]
+    win_flagged, win_whitelisted = r["win_flagged"], r["win_whitelisted"]
+    n_win_auto, errors, n_checked = r["n_win_auto"], r["errors"], r["n_checked"]
     print("# PLAN_AUDIT — registry-wide quadratic-join + global-window sweep\n")
     # Provenance stamp: ties the record to the exact engine state it
     # audited (and guarantees each regeneration is a committable diff, so

@@ -1,41 +1,31 @@
-"""FULL-REGISTRY scale sweep: time EVERY batch key at sf0.1 and at a
-deterministic 10x copy, record per-key ratios, list the worst scalers.
-
-The per-family scale_smoke runs cover the headline queries and known
-hot spots; this sweep is the dragnet — every registry key gets a
-measured 10x ratio on record (SCALESWEEP_r{N}.json), so a quadratic
-candidate space, lost broadcast, or driver materialization introduced
-by ANY future change shows up as a ratio outlier instead of hiding in
-an unmeasured corner. Streaming keys are excluded (their scale story is
-the state-store stress + watermark tests; availableNow replays make
-wall-time ratios meaningless).
-
-Extends the scale_smoke generator with 10x documents (hash-deterministic
-vocab text, same source/lang mix as FIXTURES.md) and embeddings (64-dim
-hash-derived floats, labels 0..9, vec_id 0 = the query vector) so the
-LLM/ANN keys run at scale too.
+"""Scale sweep: time registry keys at sf0.1 and at an N x copy, in one
+session, and write the record (SCALESWEEP_rN.json, SCALING.md).
 
     python tools/scale_sweep.py [--mult 10] [--report SCALESWEEP.json]
-        [--no-reprobe-regressions] [--prior SCALESWEEP_r07.json]
+        [--keys KEY ...] [--merge-into SCALESWEEP_rN.json]
+        [--sink collect|noop] [--no-noop-exonerate]
 
-Any key whose in-sweep ratio is >= 2x its prior-round record is re-probed
-once at the END of the sweep before the record is written (default on,
-VERDICT r7 #6): the in-sweep numbers stay under the key's `insweep` field,
-the re-probe becomes the headline ratio, and the record's `reprobe` stamp
-lists the adjudicated keys — back-to-back-sweep contention flags resolve
-inside the record instead of in SCALING.md prose.
+A quadratic candidate space, a lost broadcast or a driver materialization
+shows up as a ratio far above the data growth. Without --keys every batch
+key is timed; streaming keys are left out of that full sweep (their scale
+story is the state-store stress and watermark tests, and availableNow
+replays make wall-time ratios meaningless). --keys times exactly the keys
+it names, streaming ones included.
 
-Two further self-adjudication modes (VERDICT r8 #2/#4):
+The N x fixture is built once under spark-warehouse/scale_smoke_<N>x/:
+the star schema and events (generate: hash-of-id columns, the shapes and
+domains of FIXTURES.md) and documents and embeddings
+(generate_docs_embeddings), all at N x the sf0.1 row counts.
 
-- Noop-sink exoneration (default on, collect sweeps only): any key whose
-  headline collect ratio exceeds 8x is re-measured through the noop sink
-  and the numbers stamped under its `noop` field — output-volume-bound
-  keys (big collect transfer, flat engine cost) adjudicate themselves in
-  the record's worst-20.
-- `--octave KEY [KEY...]`: same-session 50x-octave protocol as a record —
-  each KEY and its declared candidate generator (OCTAVE_GENERATORS) is
-  timed at 10x and 50x in one session; steps land in --octave-report
-  (OCTAVE_r{N}.json) instead of SCALING.md prose.
+Each entry the run measures holds base, scaled, ratio and cpus (the
+session's defaultParallelism, so a record that merges runs from different
+machines says which machine measured what). Every key whose collect ratio
+exceeds 8x is re-measured through the noop sink in the same run and
+stamped under `noop`: output-volume-bound keys (big collect transfer, flat
+engine cost) adjudicate themselves. --merge-into BASE overwrites BASE's
+entries for the measured keys, keeps every other entry, and stamps
+`merged: {base_record, remeasured}`; the result goes to --report (pass
+BASE's own path to update it in place).
 """
 
 from __future__ import annotations
@@ -52,10 +42,9 @@ from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 from backup_repo_spark import registry  # noqa: E402
 from backup_repo_spark.session import get_spark  # noqa: E402
-import backup_repo_spark.session as _session  # noqa: E402
-from scale_smoke import generate  # noqa: E402
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BASE_DIR = "/root/testdata/sf0.1"
 
 # 256-word vocabulary with per-doc TOPIC slices: each doc draws from a
 # 64-word window of the vocab keyed by its topic, so word-frequency
@@ -139,6 +128,117 @@ def generate_docs_embeddings(spark: SparkSession, out: str, mult: int) -> None:
     pq.write_table(tbl, f"{out}/embeddings.parquet")
 
 
+_SEGS = "HOUSEHOLD FURNITURE MACHINERY AUTOMOBILE BUILDING".split()
+_PRIOS = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
+_ETYPES = "signup error click view purchase".split()
+
+
+def _pick(col, options):
+    """Deterministic uniform pick from a string list, keyed by an id column."""
+    arr = F.array(*[F.lit(o) for o in options])
+    return F.element_at(arr, (F.abs(F.xxhash64(col)) % len(options) + 1).cast("int"))
+
+
+def generate(spark: SparkSession, out: str, mult: int) -> None:
+    n_li, n_o, n_c, n_s, n_e = (
+        600_000 * mult, 150_000 * mult, 15_000 * mult, 1_000 * mult, 100_000 * mult)
+    parts = max(8, mult * 4)
+
+    def rnd(col, lo, hi, salt):
+        u = (F.abs(F.xxhash64(col + F.lit(salt))) % 1_000_000) / 1_000_000.0
+        return lo + u * (hi - lo)
+
+    spark.range(5).select(
+        F.col("id").cast("int").alias("r_regionkey"),
+        _pick(F.col("id"), ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]).alias("rn"),
+    ).withColumn("r_name", F.expr(
+        "element_at(array('AFRICA','AMERICA','ASIA','EUROPE','MIDDLE EAST'), "
+        "cast(r_regionkey as int) + 1)"
+    )).drop("rn").coalesce(1).write.mode("overwrite").parquet(f"{out}/region.parquet")
+
+    spark.range(25).select(
+        F.col("id").cast("int").alias("n_nationkey"),
+        F.concat(F.lit("NATION_"), F.col("id")).alias("n_name"),
+        (F.col("id") % 5).cast("int").alias("n_regionkey"),
+    ).coalesce(1).write.mode("overwrite").parquet(f"{out}/nation.parquet")
+
+    spark.range(n_c).select(
+        F.col("id").alias("c_custkey"),
+        F.format_string("Customer#%09d", F.col("id")).alias("c_name"),
+        (F.abs(F.xxhash64("id")) % 25).cast("int").alias("c_nationkey"),
+        F.round(rnd(F.col("id"), -999.0, 9999.0, 1), 2).alias("c_acctbal"),
+        _pick(F.col("id"), _SEGS).alias("c_mktsegment"),
+    ).repartition(parts).write.mode("overwrite").parquet(f"{out}/customer.parquet")
+
+    spark.range(n_s).select(
+        F.col("id").alias("s_suppkey"),
+        F.format_string("Supplier#%09d", F.col("id")).alias("s_name"),
+        (F.abs(F.xxhash64("id")) % 25).cast("int").alias("s_nationkey"),
+        F.round(rnd(F.col("id"), -999.0, 9999.0, 2), 2).alias("s_acctbal"),
+    ).repartition(8).write.mode("overwrite").parquet(f"{out}/supplier.parquet")
+
+    _PTYPES = "STANDARD SMALL MEDIUM LARGE ECONOMY PROMO".split()
+    _PNOUNS = "ring bolt washer gear cog spring plate rod".split()
+    _PADJS = "large hot blue red green dim small pale".split()
+    spark.range(20_000 * mult).select(
+        F.col("id").alias("p_partkey"),
+        F.concat_ws(" ", _pick(F.col("id") + 13, _PADJS), _pick(F.col("id") + 17, _PNOUNS)).alias("p_name"),
+        F.concat(F.lit("Brand#"), (F.abs(F.xxhash64("id", F.lit(21))) % 25).cast("string")).alias("p_brand"),
+        _pick(F.col("id") + 23, _PTYPES).alias("p_type"),
+        ((F.abs(F.xxhash64("id", F.lit(22))) % 50) + 1).cast("int").alias("p_size"),
+        F.round(rnd(F.col("id"), 900.0, 999.9, 24), 2).alias("p_retailprice"),
+    ).repartition(8).write.mode("overwrite").parquet(f"{out}/part.parquet")
+
+    day = F.expr("INTERVAL 1 DAY")
+    spark.range(n_o).select(
+        F.col("id").alias("o_orderkey"),
+        (F.abs(F.xxhash64("id")) % n_c).alias("o_custkey"),
+        _pick(F.col("id"), ["P", "O", "F"]).alias("o_orderstatus"),
+        F.round(rnd(F.col("id"), 1000.0, 400000.0, 3), 2).alias("o_totalprice"),
+        (F.lit("1995-01-01").cast("timestamp")
+         + day * (F.abs(F.xxhash64("id", F.lit(4))) % 2400).cast("int")).alias("o_orderdate"),
+        _pick(F.col("id") + 7, _PRIOS).alias("o_orderpriority"),
+    ).repartition(parts).write.mode("overwrite").parquet(f"{out}/orders.parquet")
+
+    spark.range(n_li).select(
+        (F.abs(F.xxhash64("id", F.lit(9))) % n_o).alias("l_orderkey"),
+        (F.abs(F.xxhash64("id", F.lit(10))) % (20_000 * mult)).alias("l_partkey"),
+        (F.abs(F.xxhash64("id", F.lit(11))) % n_s).alias("l_suppkey"),
+        ((F.col("id") % 7) + 1).cast("int").alias("l_linenumber"),
+        F.round(rnd(F.col("id"), 1.0, 50.0, 12)).alias("l_quantity"),
+        F.round(rnd(F.col("id"), 900.0, 100000.0, 13), 2).alias("l_extendedprice"),
+        F.round(rnd(F.col("id"), 0.0, 0.10, 14), 2).alias("l_discount"),
+        F.round(rnd(F.col("id"), 0.0, 0.08, 15), 2).alias("l_tax"),
+        _pick(F.col("id") + 3, ["R", "A", "N"]).alias("l_returnflag"),
+        _pick(F.col("id") + 5, ["O", "F"]).alias("l_linestatus"),
+        (F.lit("1995-01-02").cast("timestamp")
+         + day * (F.abs(F.xxhash64("id", F.lit(16))) % 2490).cast("int")).alias("l_shipdate"),
+    ).repartition(parts).write.mode("overwrite").parquet(f"{out}/lineitem.parquet")
+
+    sec = F.expr("INTERVAL 1 SECOND")
+    spark.range(n_e).select(
+        F.col("id").alias("event_id"),
+        (F.lit("2024-01-01").cast("timestamp")
+         + sec * (F.abs(F.xxhash64("id", F.lit(17))) % (29 * 86400)).cast("int")).alias("ts"),
+        (F.abs(F.xxhash64("id", F.lit(18))) % n_c).alias("user_id"),
+        _pick(F.col("id") + 11, _ETYPES).alias("event_type"),
+        F.round(rnd(F.col("id"), 0.01, 490.0, 19), 2).alias("value"),
+        F.format_string('{"k": %d}', (F.abs(F.xxhash64("id", F.lit(20))) % 100)).alias("props"),
+    ).repartition(parts).write.mode("overwrite").parquet(f"{out}/events.parquet")
+
+
+def fixture_dir(spark: SparkSession, mult: int) -> str:
+    """The N x fixture directory, generated on first use."""
+    d = os.path.join(_REPO, "spark-warehouse", f"scale_smoke_{mult}x")
+    if not os.path.exists(f"{d}/lineitem.parquet"):
+        print(f"generating {mult}x data under {d} ...", file=sys.stderr)
+        generate(spark, d, mult)
+    if not os.path.exists(f"{d}/documents.parquet"):
+        print(f"generating {mult}x documents/embeddings ...", file=sys.stderr)
+        generate_docs_embeddings(spark, d, mult)
+    return d
+
+
 def _time_key(fn, spark, sf_dir, sink: str = "collect") -> float:
     """Time a key end-to-end.  sink='collect' matches the driver protocol
     (includes driver-side result transfer); sink='noop' materializes every
@@ -162,94 +262,6 @@ def _time_key(fn, spark, sf_dir, sink: str = "collect") -> float:
     return round(best, 3)
 
 
-def _regressed_keys(
-    results: dict[str, dict], prior: dict[str, dict], factor: float = 2.0
-) -> list[str]:
-    """Keys whose in-sweep ratio at least `factor`-ed vs the prior-round
-    record — the candidates for an end-of-sweep quiet re-probe. Round 7
-    adjudicated exactly this class by hand (udf_map_in_pandas 14.65x and
-    fn_null 9.06x in-sweep, both back at prior-round levels on a same-day
-    re-probe: back-to-back-sweep contention, not engine); this automates
-    that adjudication before the record is written (VERDICT r7 #6)."""
-    out = []
-    for name, entry in results.items():
-        pr = prior.get(name, {}).get("ratio")
-        r = entry.get("ratio")
-        if pr and r and r >= factor * pr:
-            out.append(name)
-    return sorted(out)
-
-
-def _octave_verdict(entry: dict, gen_entry: dict, gap_tol_pct: float = 10.0) -> dict:
-    """Adjudication rule for an octave dependent vs its generator
-    (round 9, OCTAVE_r09_reprobe.json): the STEP ratio is noisy when the
-    10x base is overhead-dominated (<~20 s runs land under or over the
-    generator's base on fixed stage costs, not data volume), so a
-    dependent whose step exceeds the generator's is judged on the
-    ABSOLUTE gap at the larger octave — real growth above the generator
-    would widen that gap with scale; a flat gap means the added stage
-    contributes no growth of its own. Returns the stamps to merge into
-    the dependent's record entry."""
-    gap = round(
-        100.0
-        * (entry["scaled"] - gen_entry["scaled"])
-        / max(gen_entry["scaled"], 1e-9),
-        1,
-    )
-    out = {"gap50_pct": gap}
-    if entry["step"] <= gen_entry["step"]:
-        # ADVICE r9: a passing step can be minted by a contention-inflated
-        # 10x base (the docstring above calls step the noisy statistic), so
-        # a wide absolute gap must stay visible in the record rather than
-        # be adjudicated silently — stamp the ambiguity as its own verdict.
-        out["verdict"] = (
-            "at-or-below-generator"
-            if gap <= gap_tol_pct
-            else "step-pass-gap-wide"
-        )
-    elif gap <= gap_tol_pct:
-        out["verdict"] = "flat-absolute-gap"
-    else:
-        out["verdict"] = "above-generator"
-    return out
-
-
-def _merge_stamps(
-    prior_report: dict,
-    reprobe_stamp: dict | None,
-    noop_stamp: list | None,
-    remeasured: set | None = None,
-) -> tuple[dict | None, list | None]:
-    """Stamp rule for --merge-into: a partial re-measure must not ERASE
-    the full run's adjudication. Carry the prior record's reprobe/noop
-    stamps forward — MINUS any key this merge run itself re-measured
-    (its entry was just overwritten, so the old adjudication no longer
-    describes it) — and keep the merge run's own stamps attributed to
-    the merge run's own prior anchor, never the old record's. Without
-    this, a --keys merge rewrote the record with an empty reprobe and no
-    noop_exonerated list (round 9); the naive union then mis-attributed
-    merge-run reprobes to the old anchor and kept stamps for overwritten
-    entries."""
-    rem = remeasured or set()
-    prior_reprobe = prior_report.get("reprobe")
-    if prior_reprobe:
-        carried = dict(prior_reprobe)
-        if "keys" in carried:
-            carried["keys"] = sorted(set(carried["keys"]) - rem)
-        carried_alive = carried.get("keys") or "skipped" in carried
-        if reprobe_stamp is None or not reprobe_stamp.get("keys"):
-            reprobe_stamp = carried if carried_alive else reprobe_stamp
-        elif carried_alive:
-            # both contribute: keep each attributed to its own anchor
-            reprobe_stamp = {**reprobe_stamp, "carried": carried}
-    prior_noop = prior_report.get("noop_exonerated")
-    if prior_noop:
-        noop_stamp = sorted(
-            (set(prior_noop) - rem) | set(noop_stamp or [])
-        )
-    return reprobe_stamp, noop_stamp
-
-
 def _noop_candidates(results: dict[str, dict], threshold: float = 8.0) -> list[str]:
     """Keys whose headline collect-sink ratio exceeds `threshold` — the
     candidates for the end-of-sweep noop-sink exoneration pass. Rounds 5-8
@@ -268,7 +280,7 @@ def _noop_candidates(results: dict[str, dict], threshold: float = 8.0) -> list[s
     )
 
 
-def _noop_exonerate(results, spark, out, mult) -> list[str]:
+def _noop_exonerate(results, spark, out) -> list[str]:
     """Re-measure every >8x collect-ratio key under the noop sink (pure
     distributed materialization, zero driver transfer) and stamp the
     numbers into the entry: `noop` = {base, scaled, ratio}. A noop ratio
@@ -280,11 +292,7 @@ def _noop_exonerate(results, spark, out, mult) -> list[str]:
     for name in flagged:
         entry = results[name]
         try:
-            _session._TABLE_CACHE.clear()
-            base = _time_key(
-                registry.QUERIES[name], spark, "/root/testdata/sf0.1", "noop"
-            )
-            _session._TABLE_CACHE.clear()
+            base = _time_key(registry.QUERIES[name], spark, BASE_DIR, "noop")
             scaled = _time_key(registry.QUERIES[name], spark, out, "noop")
         except Exception as e:  # noqa: BLE001
             entry["noop_err"] = f"{type(e).__name__}: {str(e)[:160]}"
@@ -303,134 +311,24 @@ def _noop_exonerate(results, spark, out, mult) -> list[str]:
     return stamped
 
 
-# Same-session 50x-octave protocol (VERDICT r8 #4): each dependent key is
-# measured against its declared candidate GENERATOR — the key whose growth
-# bounds it by construction — at 10x and 50x in ONE session (cross-session
-# octave ratios drift ~20% with machine state, SCALING.md round 4). The
-# dependent's step at/below the generator's step means the added stage
-# contributes no super-linear growth of its own.
-OCTAVE_GENERATORS = {
-    "llm_dup_source_matrix": "llm_dedup_minhash_banded",
-    "llm_dedup_drop_rate": "llm_dedup_minhash_banded",
-    "llm_dup_cluster_profile": "llm_dedup_minhash_banded",
-    "llm_dedup_cluster_banded": "llm_dedup_minhash_banded",
-    "llm_dedup_survivorship_banded": "llm_dedup_minhash_banded",
-    "llm_dedup_cluster": "llm_dedup_ngram",
-    "llm_dedup_survivorship": "llm_dedup_ngram",
-    # round 10 rotation (VERDICT r9 #6): the PQ serving chain — search
-    # wholly contains codebook training; recall and refine wholly contain
-    # the ADC search. llm_ann_partitioned has no generator: it is
-    # self-bounded (bucket-pruned scan) and is measured alone.
-    "llm_pq_search": "llm_pq_codebook",
-    "llm_pq_recall": "llm_pq_search",
-    "llm_pq_refine": "llm_pq_search",
-    # round 11 rotation (VERDICT r10 #5): BPE encode replays the merge
-    # table llm_bpe_merges trains (it collects that key's output), so
-    # merges bounds it; the salt arm and its eval both contain the
-    # collapsed banded join (salted candidates are a subset of unsalted;
-    # the eval computes both joins), so the unsalted banded key is their
-    # generator. llm_sim_search / llm_semdedup are self-bounded
-    # (brute-force top-k; adaptive-cluster cosine) and measured alone.
-    "llm_bpe_encode": "llm_bpe_merges",
-    "llm_dedup_salted_band": "llm_dedup_minhash_banded",
-    "llm_lsh_salt_eval": "llm_dedup_minhash_banded",
-    # the cap planner contains the unsalted co-bucket join + one-shot
-    # verification; its per-cap arithmetic is map-side conditional aggs
-    "llm_lsh_salt_plan": "llm_dedup_minhash_banded",
-}
-
-
-def _octave_plan(keys: list[str]) -> tuple[list[str], dict[str, str]]:
-    """(generators to measure once, dependent->generator map) for an
-    --octave run. Unknown keys raise; a key with no declared generator is
-    measured alone (it IS a generator or a self-bounded key)."""
-    unknown = [k for k in keys if k not in registry.QUERIES]
-    if unknown:
-        raise SystemExit(f"--octave: unknown registry keys: {unknown}")
-    dep_to_gen = {k: OCTAVE_GENERATORS[k] for k in keys if k in OCTAVE_GENERATORS}
-    gens = sorted(set(dep_to_gen.values()) - set(keys))
-    return gens, dep_to_gen
-
-
-def _latest_prior_record(exclude: str | None = None) -> str | None:
-    """Newest prior-round SCALESWEEP record by PARSED round number —
-    lexicographic sort mis-orders unpadded rounds (r9 vs r10), and the
-    record currently being (re)written must not serve as its own prior
-    (ADVICE r8)."""
-    import glob
-    import re
-
-    recs = []
-    for p in glob.glob(os.path.join(_REPO, "SCALESWEEP_r*.json")):
-        name = os.path.basename(p)
-        if exclude and name == os.path.basename(exclude):
-            continue
-        m = re.fullmatch(r"SCALESWEEP_r(\d+)\.json", name)
-        if m:
-            recs.append((int(m.group(1)), p))
-    return max(recs)[1] if recs else None
-
-
-def _reprobe(results, spark, out, sink, prior_path, mult) -> dict:
-    """Re-measure every regressed key once more at the END of the sweep
-    (after the back-to-back burst has passed), keeping the in-sweep
-    numbers under `insweep` and promoting the re-probe to the key's
-    headline base/scaled/ratio. Returns the report stamp."""
-    try:
-        with open(prior_path) as fh:
-            prior_report = json.load(fh)
-    except (OSError, json.JSONDecodeError, TypeError) as e:
-        print(f"reprobe: no usable prior record ({e}); skipped", file=sys.stderr)
-        return {"prior": prior_path, "skipped": "unreadable prior record"}
-    if (
-        prior_report.get("mult") != mult
-        or prior_report.get("sink", "collect") != sink
-    ):
-        print("reprobe: prior record protocol differs; skipped", file=sys.stderr)
-        return {"prior": prior_path, "skipped": "prior mult/sink differ"}
-    flagged = _regressed_keys(results, prior_report["results"])
-    reprobed = []
-    for name in flagged:
-        entry = results[name]
-        try:
-            _session._TABLE_CACHE.clear()
-            base = _time_key(registry.QUERIES[name], spark, "/root/testdata/sf0.1", sink)
-            _session._TABLE_CACHE.clear()
-            scaled = _time_key(registry.QUERIES[name], spark, out, sink)
-        except Exception as e:  # noqa: BLE001
-            entry["reprobe_err"] = f"{type(e).__name__}: {str(e)[:160]}"
-            continue
-        entry["insweep"] = {
-            "base": entry["base"], "scaled": entry["scaled"], "ratio": entry["ratio"],
-        }
-        entry["base"], entry["scaled"] = base, scaled
-        entry["ratio"] = round(scaled / max(base, 1e-9), 2)
-        reprobed.append(name)
-        print(
-            f"reprobe {name}: prior {prior_report['results'][name]['ratio']} "
-            f"-> insweep {entry['insweep']['ratio']} -> {entry['ratio']}",
-            file=sys.stderr,
-        )
-    return {"prior": os.path.basename(prior_path), "keys": reprobed}
+def _merge_stamps(
+    prior_report: dict, noop_stamp: list | None, remeasured: set
+) -> list | None:
+    """The noop_exonerated list of a --merge-into record: the base
+    record's list minus every key this run re-measured (its entry was
+    just overwritten, so the old adjudication no longer describes it),
+    plus this run's own stamps. Without the carry a --keys merge rewrote
+    the record with no noop_exonerated list (round 9)."""
+    prior_noop = prior_report.get("noop_exonerated")
+    if not prior_noop:
+        return noop_stamp
+    return sorted((set(prior_noop) - remeasured) | set(noop_stamp or []))
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--mult", type=int, default=10)
     ap.add_argument("--report", default="SCALESWEEP.json")
-    ap.add_argument(
-        "--reprobe-regressions",
-        action=argparse.BooleanOptionalAction,
-        default=True,
-        help="re-measure any key whose ratio >= 2x its prior-round record "
-        "at the end of the sweep, before the record is written (default on)",
-    )
-    ap.add_argument(
-        "--prior",
-        default=None,
-        help="prior-round SCALESWEEP record to compare against "
-        "(default: newest SCALESWEEP_r*.json in the repo root)",
-    )
     ap.add_argument(
         "--sink",
         choices=["collect", "noop"],
@@ -447,165 +345,58 @@ def main() -> None:
         "record entry (default on; only applies to --sink collect)",
     )
     ap.add_argument(
-        "--octave",
-        nargs="+",
-        default=None,
-        metavar="KEY",
-        help="same-session 50x-octave mode: measure each KEY and its "
-        "declared generator (OCTAVE_GENERATORS) at 10x and 50x, write "
-        "--octave-report, and exit (no full sweep)",
-    )
-    ap.add_argument(
-        "--octave-report",
-        default="OCTAVE.json",
-        help="report path for --octave mode",
-    )
-    ap.add_argument(
         "--keys",
         nargs="*",
         default=None,
-        help="measure only these registry keys (default: all batch keys)",
+        help="measure only these registry keys, streaming ones included "
+        "(default: all batch keys)",
     )
     ap.add_argument(
         "--merge-into",
         default=None,
-        help="update an existing report in place with the re-measured "
-        "--keys entries (keeps every other key's numbers), recomputing "
-        "the summary fields — for re-recording keys whose code changed "
-        "after a full sweep",
+        metavar="BASE",
+        help="merge the measured entries into the existing record BASE "
+        "(every other entry is kept) and write the result to --report",
     )
     args = ap.parse_args()
-    # r14: aqe_probe C profile (OPTIMIZATION_r13.md AQE adjudication) —
-    # overprovision partitions, let AQE coalesce to 64 MB from runtime
-    # bytes; -18.1% vs pinned 32 at the 50x dedup fixture.
-    spark = get_spark("scale-sweep", shuffle_partitions=256, advisory_partition_mb=64)
-
-    def fixture_dir(mult: int) -> str:
-        d = os.path.join(_REPO, "spark-warehouse", f"scale_smoke_{mult}x")
-        if not os.path.exists(f"{d}/lineitem.parquet"):
-            generate(spark, d, mult)
-        if not os.path.exists(f"{d}/documents.parquet"):
-            print(f"generating {mult}x documents/embeddings ...", file=sys.stderr)
-            generate_docs_embeddings(spark, d, mult)
-        return d
-
-    if args.octave:
-        gens, dep_to_gen = _octave_plan(args.octave)
-        dirs = {m: fixture_dir(m) for m in (10, 50)}
-
-        def measure(name: str) -> dict:
-            _session._TABLE_CACHE.clear()
-            t10 = _time_key(registry.QUERIES[name], spark, dirs[10], args.sink)
-            _session._TABLE_CACHE.clear()
-            t50 = _time_key(registry.QUERIES[name], spark, dirs[50], args.sink)
-            e = {"base": t10, "scaled": t50,
-                 "step": round(t50 / max(t10, 1e-9), 2)}
-            print(f"octave {name}: {e}", file=sys.stderr)
-            return e
-
-        record = {"mults": [10, 50], "sink": args.sink,
-                  "generators": {}, "keys": {}}
-        for g in gens:
-            record["generators"][g] = measure(g)
-        for k in args.octave:
-            record["keys"][k] = measure(k)
-        for k, g in dep_to_gen.items():
-            gen_entry = record["generators"].get(g) or record["keys"][g]
-            record["keys"][k]["generator"] = g
-            record["keys"][k]["generator_step"] = gen_entry["step"]
-            record["keys"][k].update(_octave_verdict(record["keys"][k], gen_entry))
-        # Self-adjudication (the sweep's round-8 reprobe pattern applied
-        # to octaves): a dependent still above its generator on BOTH
-        # statistics (step AND absolute gap) gets one same-session
-        # re-probe — fresh key + generator pair — stamped into the
-        # record before it lands, so the reader never needs a second
-        # session to tell growth from box state.
-        gen_cache: dict[str, dict] = {}
-        for k, g in dep_to_gen.items():
-            # step-pass-gap-wide reprobes too (ADVICE r9): the step pass
-            # may have been minted by a contention-inflated base, and a
-            # fresh same-session pairing is exactly what resolves it.
-            if record["keys"][k].get("verdict") not in (
-                "above-generator",
-                "step-pass-gap-wide",
-            ):
-                continue
-            # One FRESH generator measure per reprobe pass, shared by its
-            # flagged dependents: still a same-session pairing, without
-            # re-paying ~4 min of generator timings per extra dependent.
-            # A failed measure must not discard 30+ minutes of collected
-            # first-pass data — stamp the error and still write the record
-            # (the full sweep's _reprobe/_noop_exonerate do the same).
-            try:
-                gen2 = gen_cache.setdefault(g, measure(g))
-                key2 = measure(k)
-            except Exception as e:  # noqa: BLE001
-                record["keys"][k]["reprobe_err"] = (
-                    f"{type(e).__name__}: {str(e)[:160]}"
-                )
-                continue
-            record["keys"][k]["reprobe"] = {
-                "generator": gen2,
-                "key": key2,
-                **_octave_verdict(key2, gen2),
-            }
-            record["keys"][k]["verdict"] = (
-                "reprobe:" + record["keys"][k]["reprobe"]["verdict"]
-            )
-        with open(args.octave_report, "w") as fh:
-            json.dump(record, fh, indent=1)
-        print(json.dumps({
-            "octave": {k: (v["step"], v.get("generator_step"))
-                       for k, v in record["keys"].items()}
-        }))
-        return
-
-    # mirror _octave_plan's unknown-key guard: a typo'd --keys otherwise
-    # measures nothing and still rewrites the report. Guard BEFORE fixture
-    # generation (ADVICE r9: a typo used to pay the ~4 min fixture build
-    # first), and reject an empty --keys list, which would also measure
-    # nothing and still re-stamp the report.
+    # Reject a typo'd or empty --keys before the fixture build: either
+    # would measure nothing and still rewrite the report.
     if args.keys is not None:
         if not args.keys:
             sys.exit("--keys: empty key list (nothing to measure)")
         unknown = sorted(set(args.keys) - set(registry.QUERIES))
         if unknown:
             sys.exit(f"--keys: unknown registry keys: {unknown}")
+        names = sorted(set(args.keys))
+    else:
+        names = sorted(k for k in registry.QUERIES if not k.startswith("stream_"))
 
-    out = fixture_dir(args.mult)
+    # r14: aqe_probe C profile (OPTIMIZATION_r13.md AQE adjudication) —
+    # overprovision partitions, let AQE coalesce to 64 MB from runtime
+    # bytes; -18.1% vs pinned 32 at the 50x dedup fixture.
+    spark = get_spark("scale-sweep", shuffle_partitions=256, advisory_partition_mb=64)
+    cpus = spark.sparkContext.defaultParallelism
+    out = fixture_dir(spark, args.mult)
 
     results: dict[str, dict] = {}
-    for name in sorted(registry.QUERIES):
-        if name.startswith("stream_"):
-            continue
-        if args.keys is not None and name not in args.keys:
-            continue
+    for name in names:
         fn = registry.QUERIES[name]
         entry: dict = {}
         try:
-            _session._TABLE_CACHE.clear()
-            entry["base"] = _time_key(fn, spark, "/root/testdata/sf0.1", args.sink)
-            _session._TABLE_CACHE.clear()
+            entry["base"] = _time_key(fn, spark, BASE_DIR, args.sink)
             entry["scaled"] = _time_key(fn, spark, out, args.sink)
             entry["ratio"] = round(entry["scaled"] / max(entry["base"], 1e-9), 2)
         except Exception as e:  # noqa: BLE001
             entry["err"] = f"{type(e).__name__}: {str(e)[:160]}"
+        entry["cpus"] = cpus
         results[name] = entry
         print(f"{name}: {entry}", file=sys.stderr)
 
-    reprobe_stamp = None
-    if args.reprobe_regressions:
-        # a --merge-into run must not compare against (or later overwrite
-        # the stamps of) the very record it is merging into
-        prior_path = args.prior or _latest_prior_record(
-            exclude=args.merge_into or args.report
-        )
-        reprobe_stamp = _reprobe(results, spark, out, args.sink, prior_path, args.mult)
-
     noop_stamp = None
     if args.noop_exonerate and args.sink == "collect":
-        noop_stamp = _noop_exonerate(results, spark, out, args.mult)
+        noop_stamp = _noop_exonerate(results, spark, out)
 
+    merged = None
     if args.merge_into:
         with open(args.merge_into) as fh:
             prior_report = json.load(fh)
@@ -625,14 +416,12 @@ def main() -> None:
                 f"!= --sink {args.sink} (re-measure with the same sink, "
                 "or write a separate report)"
             )
-        prior = prior_report["results"]
-        remeasured = set(results)
-        prior.update(results)
-        results = prior
-        args.report = args.merge_into
-        reprobe_stamp, noop_stamp = _merge_stamps(
-            prior_report, reprobe_stamp, noop_stamp, remeasured
-        )
+        merged = {
+            "base_record": os.path.basename(args.merge_into),
+            "remeasured": sorted(results),
+        }
+        noop_stamp = _merge_stamps(prior_report, noop_stamp, set(results))
+        results = {**prior_report["results"], **results}
 
     ok = {k: v for k, v in results.items() if "ratio" in v}
     worst = sorted(ok.items(), key=lambda kv: -kv[1]["ratio"])[:20]
@@ -647,8 +436,8 @@ def main() -> None:
         "worst20": [{"key": k, **v} for k, v in worst],
         "results": results,
     }
-    if reprobe_stamp is not None:
-        report["reprobe"] = reprobe_stamp
+    if merged is not None:
+        report["merged"] = merged
     if noop_stamp is not None:
         report["noop_exonerated"] = noop_stamp
     with open(args.report, "w") as fh:

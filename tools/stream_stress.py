@@ -12,7 +12,7 @@ progress.
 
     python tools/stream_stress.py [--mult 10] [--files 8]
 
-Uses the cached scale_smoke events table (generates it if missing).
+Uses the cached scale_sweep events table (generates it if missing).
 Results are recorded in SCALING.md §Streaming.
 """
 
@@ -31,6 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 from backup_repo_spark.session import get_spark  # noqa: E402
+from tools.scale_sweep import generate  # noqa: E402
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _EV_SCHEMA = (
@@ -47,8 +48,6 @@ def _staged_source(spark: SparkSession, mult: int, n_files: int) -> tuple[str, i
         _REPO, "spark-warehouse", f"scale_smoke_{mult}x", "events.parquet"
     )
     if not os.path.exists(src_parquet):
-        from scale_smoke import generate
-
         generate(spark, os.path.dirname(src_parquet), mult)
     staged = os.path.join(tempfile.mkdtemp(prefix="stream_stress_"), "src")
     df = spark.read.parquet(src_parquet)
