@@ -189,7 +189,7 @@ def insert_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = scratch_dir(spark, "insert_select")
     tgt = os.path.basename(out)  # per call, like its directory
     o = load_table(spark, sf_dir, "orders")
-    spark.sql(f"CREATE TABLE {tgt} (o_orderstatus STRING) USING parquet LOCATION '{out}/t'")
+    spark.sql(f"CREATE TABLE {tgt} (o_orderstatus STRING) USING parquet LOCATION '{out}'")
     try:
         for pred in ("o_totalprice > 300000", "o_orderpriority = '1-URGENT'"):
             spark.sql(f"INSERT INTO {tgt} SELECT o_orderstatus FROM {{o}} WHERE {pred}", o=o)
@@ -223,7 +223,7 @@ def ddl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tbl = os.path.basename(out)  # per call, like its directory
     spark.sql(
         f"CREATE TABLE {tbl} (k BIGINT, name STRING, price DOUBLE) "
-        f"USING parquet LOCATION '{out}/t'"
+        f"USING parquet LOCATION '{out}'"
     )
     try:
         spark.sql(f"INSERT INTO {tbl} VALUES (1, 'alpha', 1.5), (2, 'beta', 2.5)")

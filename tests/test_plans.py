@@ -13,12 +13,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from backup_repo_spark import registry
+from backup_repo_spark.plans.inspect import formatted_plan as plan_of
 from backup_repo_spark.session import load_table
 from tests.conftest import SF_DIR
-
-
-def plan_of(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
 def test_filter_pushdown_reaches_scan(spark):

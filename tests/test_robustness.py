@@ -24,6 +24,12 @@ _CONCURRENT = [
     "set_union",
 ]
 
+# Calls per key in the four-thread test. A race on a fixed session-level
+# name shows only when calls overlap often enough: with one shared variable
+# name, sql_session_variables failed this test in 9 of 10 runs at 32 calls,
+# and returned no wrong rows in 10 trials of 8 calls.
+_CALLS = 32
+
 
 def test_concurrent_queries_share_one_session(spark):
     """Eight queries driven from eight threads against the same session —
@@ -49,14 +55,17 @@ def test_concurrent_queries_share_one_session(spark):
         "ddl_roundtrip",
         "bulk_bucketed_join",
         "stats_analyze",
+        "sql_session_variables",
+        "sql_scalar_udf",
     ],
 )
 def test_same_writer_key_from_four_threads(spark, key):
     """One writer key run from four threads at once on the shared session.
     Each call must write its own scratch directory (a shared one fails with
     ``_temporary/0: No such file or directory``) and name its own catalog
-    tables and views (a shared name fails with TABLE_OR_VIEW_ALREADY_EXISTS
-    or reads another thread's rows), and the connector key must resolve
+    tables, views, session variables and temporary functions (a shared name
+    fails with TABLE_OR_VIEW_ALREADY_EXISTS or reads another thread's
+    rows or values), and the connector key must resolve
     its data source off the thread that built the session (else
     DATA_SOURCE_NOT_FOUND). Every result must equal the serial one."""
     serial = registry.QUERIES[key](spark, SF_DIR).toPandas()
@@ -65,7 +74,7 @@ def test_same_writer_key_from_four_threads(spark, key):
         return registry.QUERIES[key](spark, SF_DIR).toPandas()
 
     with ThreadPoolExecutor(max_workers=4) as pool:
-        parallel = list(pool.map(run, range(4)))
+        parallel = list(pool.map(run, range(_CALLS)))
     for pdf in parallel:
         assert not hard_problems(compare(pdf, serial))
 

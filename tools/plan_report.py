@@ -14,6 +14,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from backup_repo_spark import registry  # noqa: E402
+from backup_repo_spark.plans.inspect import formatted_plan  # noqa: E402
 from backup_repo_spark.session import get_spark  # noqa: E402
 
 SHOWCASE = [
@@ -82,11 +83,7 @@ def main() -> None:
     print("shuffle=8, AQE off so the static plan is shown). Each section lists")
     print("the scale-relevant properties, then the formatted plan.")
     for key, title in SHOWCASE:
-        df = registry.QUERIES[key](spark, sf)
-        jdf = df._jdf.queryExecution()
-        plan = jdf.explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
+        plan = formatted_plan(registry.QUERIES[key](spark, sf))
         print(f"\n## {key} — {title}\n")
         # Operator counts come from the tree only — the detail section
         # repeats every node name and would double them. Pushed filters

@@ -31,6 +31,7 @@ import traceback
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from backup_repo_spark import registry  # noqa: E402
+from backup_repo_spark.plans.inspect import formatted_plan  # noqa: E402
 from backup_repo_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -123,9 +124,7 @@ def plan_of(df) -> str:
     isn't worth the plan-walk while the only callers are the sweep gate
     and plan reports, which own their sessions."""
     df.sparkSession.catalog.clearCache()
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    return formatted_plan(df)
 
 
 def _bracket_groups(s: str) -> list[str]:
@@ -309,11 +308,8 @@ def main() -> None:
     win_flagged, win_whitelisted = r["win_flagged"], r["win_whitelisted"]
     n_win_auto, errors, n_checked = r["n_win_auto"], r["errors"], r["n_checked"]
     print("# PLAN_AUDIT — registry-wide quadratic-join + global-window sweep\n")
-    # Provenance stamp: ties the record to the exact engine state it
-    # audited (and guarantees each regeneration is a committable diff, so
-    # the tests/test_selfcheck_freshness.py timestamp gate can't be
-    # satisfied by an unchanged stale file).
-    import datetime
+    # Provenance stamp: the engine commit the record audited, so a reader
+    # can tell whether it is stale.
     import subprocess
 
     try:
@@ -324,10 +320,7 @@ def main() -> None:
         ).strip()
     except Exception:  # noqa: BLE001
         sha = "unknown"
-    stamp = datetime.datetime.now(datetime.timezone.utc).strftime(
-        "%Y-%m-%d %H:%M:%SZ"
-    )
-    print(f"Generated {stamp} at engine commit {sha}.\n")
+    print(f"Generated at engine commit {sha}.\n")
     print(f"Checked {n_checked} batch keys (streaming keys exercised by their")
     print("own tests). Anti-patterns searched: CartesianProduct,")
     print("BroadcastNestedLoopJoin, unpartitioned Window (ordered or OVER()).\n")

@@ -2,8 +2,7 @@
 session, and write the record (SCALESWEEP_rN.json, SCALING.md).
 
     python tools/scale_sweep.py [--mult 10] [--report SCALESWEEP.json]
-        [--keys KEY ...] [--merge-into SCALESWEEP_rN.json]
-        [--sink collect|noop] [--no-noop-exonerate]
+        [--keys KEY ...] [--sink collect|noop] [--no-noop-exonerate]
 
 A quadratic candidate space, a lost broadcast or a driver materialization
 shows up as a ratio far above the data growth. Without --keys every batch
@@ -17,15 +16,12 @@ the star schema and events (generate: hash-of-id columns, the shapes and
 domains of FIXTURES.md) and documents and embeddings
 (generate_docs_embeddings), all at N x the sf0.1 row counts.
 
-Each entry the run measures holds base, scaled, ratio and cpus (the
-session's defaultParallelism, so a record that merges runs from different
-machines says which machine measured what). Every key whose collect ratio
-exceeds 8x is re-measured through the noop sink in the same run and
-stamped under `noop`: output-volume-bound keys (big collect transfer, flat
-engine cost) adjudicate themselves. --merge-into BASE overwrites BASE's
-entries for the measured keys, keeps every other entry, and stamps
-`merged: {base_record, remeasured}`; the result goes to --report (pass
-BASE's own path to update it in place).
+One run writes one record: each entry holds base, scaled and ratio, and
+the record's `cpus` (the session's defaultParallelism) says which machine
+measured all of them. Every key whose collect ratio exceeds 8x is
+re-measured through the noop sink in the same run and stamped under
+`noop`: output-volume-bound keys (big collect transfer, flat engine cost)
+adjudicate themselves.
 """
 
 from __future__ import annotations
@@ -311,20 +307,6 @@ def _noop_exonerate(results, spark, out) -> list[str]:
     return stamped
 
 
-def _merge_stamps(
-    prior_report: dict, noop_stamp: list | None, remeasured: set
-) -> list | None:
-    """The noop_exonerated list of a --merge-into record: the base
-    record's list minus every key this run re-measured (its entry was
-    just overwritten, so the old adjudication no longer describes it),
-    plus this run's own stamps. Without the carry a --keys merge rewrote
-    the record with no noop_exonerated list (round 9)."""
-    prior_noop = prior_report.get("noop_exonerated")
-    if not prior_noop:
-        return noop_stamp
-    return sorted((set(prior_noop) - remeasured) | set(noop_stamp or []))
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--mult", type=int, default=10)
@@ -350,13 +332,6 @@ def main() -> None:
         default=None,
         help="measure only these registry keys, streaming ones included "
         "(default: all batch keys)",
-    )
-    ap.add_argument(
-        "--merge-into",
-        default=None,
-        metavar="BASE",
-        help="merge the measured entries into the existing record BASE "
-        "(every other entry is kept) and write the result to --report",
     )
     args = ap.parse_args()
     # Reject a typo'd or empty --keys before the fixture build: either
@@ -388,7 +363,6 @@ def main() -> None:
             entry["ratio"] = round(entry["scaled"] / max(entry["base"], 1e-9), 2)
         except Exception as e:  # noqa: BLE001
             entry["err"] = f"{type(e).__name__}: {str(e)[:160]}"
-        entry["cpus"] = cpus
         results[name] = entry
         print(f"{name}: {entry}", file=sys.stderr)
 
@@ -396,48 +370,20 @@ def main() -> None:
     if args.noop_exonerate and args.sink == "collect":
         noop_stamp = _noop_exonerate(results, spark, out)
 
-    merged = None
-    if args.merge_into:
-        with open(args.merge_into) as fh:
-            prior_report = json.load(fh)
-        # Refuse incomparable merges (ADVICE r5): a re-measure at a
-        # different multiplier or through a different sink would silently
-        # corrupt the record's comparability.
-        prior_mult = prior_report.get("mult")
-        if prior_mult != args.mult:
-            sys.exit(
-                f"--merge-into refused: prior report mult={prior_mult} "
-                f"!= --mult {args.mult}"
-            )
-        prior_sink = prior_report.get("sink", "collect")
-        if prior_sink != args.sink:
-            sys.exit(
-                f"--merge-into refused: prior report sink={prior_sink} "
-                f"!= --sink {args.sink} (re-measure with the same sink, "
-                "or write a separate report)"
-            )
-        merged = {
-            "base_record": os.path.basename(args.merge_into),
-            "remeasured": sorted(results),
-        }
-        noop_stamp = _merge_stamps(prior_report, noop_stamp, set(results))
-        results = {**prior_report["results"], **results}
-
     ok = {k: v for k, v in results.items() if "ratio" in v}
     worst = sorted(ok.items(), key=lambda kv: -kv[1]["ratio"])[:20]
     report = {
         "mult": args.mult,
-        # measurement protocol stamp (ADVICE r5): lets readers and future
-        # --merge-into runs tell collect-protocol records from noop ones
+        # measurement protocol stamp (ADVICE r5): lets readers tell
+        # collect-protocol records from noop ones
         "sink": args.sink,
+        "cpus": cpus,
         "keys_timed": len(ok),
         "keys_errored": len(results) - len(ok),
         "errors": {k: v["err"] for k, v in results.items() if "err" in v},
         "worst20": [{"key": k, **v} for k, v in worst],
         "results": results,
     }
-    if merged is not None:
-        report["merged"] = merged
     if noop_stamp is not None:
         report["noop_exonerated"] = noop_stamp
     with open(args.report, "w") as fh:

@@ -6,7 +6,7 @@ order-insensitive values. Use while iterating:
 
     python tools/selfcheck.py                # all queries at sf0.01
     python tools/selfcheck.py --sf sf0.001 agg_tpch_q1 join_broadcast
-    python tools/selfcheck.py --report SELFCHECK_r03.json
+    python tools/selfcheck.py --report SELFCHECK_rN.json
 
 The same runner is wired into CI as a slow-marked test
 (tests/test_selfcheck_full.py) so every registry key has an sf0.01
