@@ -8,23 +8,9 @@ registry.ORACLES) — the driver contract in ``__spark_entry__.py`` reads it.
 
 from backup_repo_spark import registry, session  # noqa: F401
 
-# Import every query module for its registration side effects.
-#
-# ORDER IS DELIBERATE (VERDICT r7 #3, rotated each round since r8): the
-# driver's per-round correctness gate samples the FIRST 50 keys of
-# `queries()` in dict insertion order (mechanism verified round 8 against
-# CORRECTNESS_r01..r07 — every round sampled exactly the first-50
-# prefix). Rounds 1-7 sampled the fn_*/llm_* families; round 8 rotated
-# the §2 contract core; round 9 windows/sorts/setops/subqueries/DSv2/
-# layout/streaming-parity/UDx; round 10 events-analytics + time-series +
-# storage-clustering; round 11 the full-TPC-H suites + graph + ML-on-SQL
-# + rank-stats + skew. Round 12 rotates a SIXTH zero-overlap slice — the
-# LLM-pipeline core the brief centers on — via registry.promote() below
-# (module import order alone can no longer cut an exact never-sampled 50:
-# llm/pipeline registers 15 keys of which 3 are already sampled, and the
-# one remaining never-sampled dedup key lives in a 23-key module).
-# tools/selfcheck.py still covers the full registry every round
-# regardless of this ordering.
+# Import every query module for its registration side effects. The driver
+# samples the first 50 keys of `queries()` in registration order, and
+# tests/test_coverage.py requires each of them to have an oracle.
 from backup_repo_spark.operators import (  # noqa: F401
     tpch_full,
     tpch_more,
@@ -81,40 +67,5 @@ from backup_repo_spark.llm import (  # noqa: F401
 )
 from backup_repo_spark.plans import inspect as plans_inspect  # noqa: F401
 from backup_repo_spark.operators import cache_reuse  # noqa: F401
-
-# Round-12 driver-sample slice (SIXTH distinct slice, verified 0-key
-# overlap with the 260 keys sampled in CORRECTNESS_r01..r11): the
-# LLM-data-pipeline core — text analysis (16), similarity search /
-# embeddings (13), the 12 never-sampled curation-pipeline keys, product
-# quantization (4), four single-key modules, and the one never-sampled
-# dedup curator view. Every key carries a value oracle
-# (tests/test_coverage.py pins the prefix and its oracle coverage).
-_SLICE6 = [
-    # llm/textstats — text analysis pack
-    "llm_text_stats", "llm_quality_filter", "llm_lang_id",
-    "llm_fingerprint", "llm_token_count", "llm_tfidf",
-    "llm_quality_score", "llm_repetition_signals", "llm_ngram_entropy",
-    "llm_source_signature", "llm_vocab_growth", "llm_tfidf_docsim",
-    "llm_source_gini", "llm_boilerplate_prefix", "llm_novelty_score",
-    "llm_sentiment_lexicon",
-    # llm/simsearch — embedding similarity / ANN family
-    "llm_sim_search", "llm_embed_neardup", "llm_sim_search_ivf",
-    "llm_embed_centroid", "llm_ann_recall", "llm_embed_quantize",
-    "llm_hard_negatives", "llm_contrastive_triplets",
-    "llm_sim_search_incremental", "llm_sim_search_pandas",
-    "llm_ann_partitioned", "llm_semdedup", "llm_mmr_rerank",
-    # llm/pipeline — the 12 never-driver-sampled curation keys
-    "llm_stopword_topk", "llm_source_mixture", "llm_contamination",
-    "llm_collocations", "llm_seq_pack", "llm_dataset_card",
-    "llm_filter_funnel", "llm_chunk_dedup", "llm_curriculum_order",
-    "llm_token_budget_cap", "llm_e2e_curation", "llm_span_dedup_rebuild",
-    # llm/pq — product quantization
-    "llm_pq_codebook", "llm_pq_search", "llm_pq_recall", "llm_pq_refine",
-    # single-key modules + the last never-sampled dedup key
-    "skyline_frontier", "join_editdist_symspell",
-    "nested_dremel_roundtrip", "ddl_astro_dialect",
-    "llm_dup_cluster_profile",
-]
-registry.promote(_SLICE6)
 
 __all__ = ["registry", "session"]

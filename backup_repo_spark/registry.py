@@ -18,34 +18,6 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
 
-def promote(prefix: list[str]) -> None:
-    """Rebuild QUERIES so `prefix` keys come first, in the given order;
-    all other keys keep their relative registration order.
-
-    The driver's per-round correctness gate samples the FIRST 50 keys of
-    ``queries()`` in dict insertion order. Rounds 8-11 rotated
-    never-sampled families to the front by reordering module imports in
-    ``backup_repo_spark/__init__``; module-granularity ordering cannot
-    express round 12's slice (llm/pipeline registers 15 keys of which 3
-    are already driver-sampled, llm/dedup 23 of which 8 are not), so the
-    rotation is now an explicit key list. Raises on unknown keys —
-    a renamed key must fail the rotation loudly, not silently shrink the
-    driver sample."""
-    missing = [k for k in prefix if k not in QUERIES]
-    if missing:
-        raise KeyError(f"promote(): unknown query keys {missing}")
-    if len(set(prefix)) != len(prefix):
-        dupes = sorted({k for k in prefix if prefix.count(k) > 1})
-        raise ValueError(
-            f"promote(): duplicate keys {dupes} would silently shrink the "
-            "driver sample"
-        )
-    rest = [k for k in QUERIES if k not in set(prefix)]
-    reordered = {k: QUERIES[k] for k in [*prefix, *rest]}
-    QUERIES.clear()
-    QUERIES.update(reordered)
-
-
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a query under ``name``; ``oracle`` is equivalent DuckDB SQL
     (omit for non-SQL-expressible ops → driver does a rows-only check)."""

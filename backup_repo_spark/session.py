@@ -44,7 +44,6 @@ def get_spark(
     cpus: str | int | None = None,
     shuffle_partitions: int = 32,
     adaptive: bool = True,
-    advisory_partition_mb: int | None = None,
 ) -> SparkSession:
     """Build the engine's SparkSession with scale-ready defaults.
 
@@ -53,17 +52,9 @@ def get_spark(
     which costs ~25-35% wall time on sub-second queries (measured at sf0.1,
     round 2) while buying nothing — there is no skew or mis-estimated
     shuffle to fix at that scale. Production/scale sessions keep it on.
-
-    ``advisory_partition_mb`` is the guide-§2.2 overprovision-and-coalesce
-    shape: set ``shuffle_partitions`` high and let AQE coalesce down to
-    this advisory size from REAL runtime bytes. Measured by the retired
-    aqe_probe (README "Retired probes") at the 50x banded-dedup fixture
-    (r13): partitions 256 + advisory 64 MB beat the pinned-32 profile by
-    18.1% (and the AQE-off arm by 18.1+9.0%). Adopted by the scale tools in r14 per the
-    r13 adjudication (do not adopt mid-record).
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         # a TIMESTAMP(NANOS) events file needs this for Spark 4.x to read it
@@ -78,32 +69,20 @@ def get_spark(
         # retired codec_probe (README "Retired probes") at the 50x dedup
         # corpus: zstd shuffle halves shuffle bytes (1248 -> 588 MB, -53%)
         # for ~+14% executor CPU — the right trade on a NIC-bound cluster,
-        # the wrong one on this CPU-rich single box, so the local default
-        # stays lz4 (the Spark default) and production sets
-        # SPARK_GRAFT_IO_CODEC=zstd.
+        # the wrong one on a CPU-rich single box, so the shuffle codec
+        # stays lz4 (the Spark default).
         # Parquet zstd is strictly better locally too (lineitem sf0.1:
         # 10.26 -> 8.24 MB, no scan penalty), so it IS the default.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),
-        )
+        .config("spark.io.compression.codec", "lz4")
+        .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .getOrCreate()
     )
-    if advisory_partition_mb is not None:
-        builder = builder.config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            f"{advisory_partition_mb}m",
-        )
-    return builder.getOrCreate()
 
 
 def scratch_dir(spark: SparkSession, tag: str) -> str:

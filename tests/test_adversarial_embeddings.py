@@ -171,7 +171,7 @@ def test_mmr_rerank_diversifies(spark, tmp_path_factory):
     # ties at .905 after quantization and loses the vec_id tie-break)
     assert picks[0] == 3
     # pure top-2 would be {3, 4}; MMR's redundancy penalty must demote
-    # the scaled copy and promote the diverse vec 5 to rank 2
+    # the scaled copy and lift the diverse vec 5 to rank 2
     assert picks[1] == 5
     assert 4 in picks[2:]  # demoted, not dropped — still high-relevance
     # per-query outputs are 5 distinct picks

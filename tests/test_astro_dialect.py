@@ -209,6 +209,23 @@ def test_shell_statement_split_quote_aware():
     assert split_statements("SELECT \"a;b\"") == ['SELECT "a;b"']
 
 
+def test_shell_statements_keep_unterminated_tail():
+    from tools.astro_shell import statements
+
+    # piped input without a closing ';' still runs its last statement
+    assert list(statements(["SELECT count(*) AS n FROM region"])) == [
+        "SELECT count(*) AS n FROM region"
+    ]
+    # a statement spans lines until one ends with ';'; the tail follows
+    got = list(statements(["SELECT 1,", "2; SELECT 3;", "SELECT", "4"]))
+    assert got == ["SELECT 1, 2", " SELECT 3", "SELECT 4"]
+    # 'exit' between statements stops; inside a statement it is text
+    assert list(statements(["SELECT 1;", "exit", "SELECT 2;"])) == ["SELECT 1"]
+    assert list(statements(["SELECT", "exit"])) == ["SELECT exit"]
+    assert list(statements(["SELECT 1;", " "])) == ["SELECT 1"]
+    assert list(statements([])) == []
+
+
 def test_near_miss_astro_statements_rejected(dialect):
     """Statements carrying Astro-only grammar markers that don't parse as a
     supported shape must be rejected loudly, not delegated to Spark SQL

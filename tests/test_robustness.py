@@ -107,9 +107,7 @@ def test_session_codec_defaults(spark):
     OPTIMIZATION_r13.md §3): parquet writes default to
     zstd (strictly better locally: lineitem sf0.1 10.26 -> 8.24 MB, no
     scan penalty); the shuffle codec stays at Spark's lz4 default
-    locally (zstd halves shuffle bytes but costs ~+14% executor CPU —
-    the production override is SPARK_GRAFT_IO_CODEC=zstd). Both are
-    env-parameterised so the driver's bench profile is unchanged."""
+    (zstd halves shuffle bytes but costs ~+14% executor CPU)."""
     assert spark.conf.get("spark.sql.parquet.compression.codec") == "zstd"
     assert spark.conf.get("spark.io.compression.codec") == "lz4"
 

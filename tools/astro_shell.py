@@ -6,15 +6,18 @@ statements through the Astro dialect (MAPPED BY DDL / LOAD DATA INPATH
 recognized; everything else delegated to Spark SQL).
 
     python tools/astro_shell.py [--sf /root/testdata/sf0.01] [-e "SELECT ..."]
+    echo "SELECT count(*) FROM lineitem" | python tools/astro_shell.py
 
 ``-e`` executes one statement batch (semicolon-separated) and exits —
-the non-interactive mode CI/scripts use.
+the non-interactive mode CI/scripts use. Piped input runs every
+statement, including a last one without a closing ``;``.
 """
 
 from __future__ import annotations
 
 import argparse
 import sys
+from collections.abc import Iterable, Iterator
 
 sys.path.insert(0, ".")
 
@@ -48,6 +51,31 @@ def split_statements(text: str) -> list[str]:
     return out
 
 
+def statements(lines: Iterable[str]) -> Iterator[str]:
+    """Buffer input lines into statements: yield each statement once a line
+    ends with ';', and at end of input the unterminated tail. Stops at
+    'exit' or 'quit' on a line of its own between statements."""
+    buf: list[str] = []
+    for line in lines:
+        if not buf and line.strip().lower() in ("exit", "quit"):
+            return
+        buf.append(line)
+        if line.rstrip().endswith(";"):
+            yield from split_statements(" ".join(buf))
+            buf = []
+    tail = " ".join(buf)
+    if tail.strip():
+        yield from split_statements(tail)
+
+
+def _input_lines(prompt: str) -> Iterator[str]:
+    while True:
+        try:
+            yield input(prompt)
+        except EOFError:
+            return
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=DEFAULT_SF_DIR)
@@ -73,20 +101,11 @@ def main() -> int:
             run(stmt)
         return 0
 
-    print(f"astro-shell — tables registered from {args.sf}; 'exit' to quit")
-    buf: list[str] = []
-    while True:
-        try:
-            line = input("... " if buf else "sql> ")
-        except EOFError:
-            break
-        if not buf and line.strip().lower() in ("exit", "quit"):
-            break
-        buf.append(line)
-        if line.rstrip().endswith(";"):
-            for stmt in split_statements(" ".join(buf)):
-                run(stmt)
-            buf = []
+    interactive = sys.stdin.isatty()
+    if interactive:
+        print(f"astro-shell — tables registered from {args.sf}; 'exit' to quit")
+    for stmt in statements(_input_lines("sql> " if interactive else "")):
+        run(stmt)
     return 0
 
 

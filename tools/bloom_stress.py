@@ -62,7 +62,7 @@ def _run(spark: SparkSession, bloom: bool) -> dict:
 
 def main() -> None:
     spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]")
         .appName("bloom-stress")
         .config("spark.ui.enabled", "true")
         .config("spark.sql.shuffle.partitions", "32")

@@ -40,7 +40,7 @@ def main() -> int:
     args = ap.parse_args()
     sf_dir = f"/root/testdata/{args.sf}"
 
-    spark = get_spark(cpus=16)
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -33,7 +33,7 @@ BENCH_QUERIES = {
 
 
 def _spark() -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     b = (
         SparkSession.builder.appName("headline-probe")
         .master(f"local[{cpus}]")

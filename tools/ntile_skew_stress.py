@@ -65,7 +65,7 @@ def main() -> None:
     args = ap.parse_args()
     spark = (
         SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
         )
         .appName("ntile-skew-stress")
         .config("spark.sql.shuffle.partitions", "32")

@@ -346,10 +346,8 @@ def main() -> None:
     else:
         names = sorted(k for k in registry.QUERIES if not k.startswith("stream_"))
 
-    # r14: aqe_probe C profile (OPTIMIZATION_r13.md AQE adjudication) —
-    # overprovision partitions, let AQE coalesce to 64 MB from runtime
-    # bytes; -18.1% vs pinned 32 at the 50x dedup fixture.
-    spark = get_spark("scale-sweep", shuffle_partitions=256, advisory_partition_mb=64)
+    # AQE coalesces to Spark's default 64 MB advisory size (aqe_probe, README "Retired probes").
+    spark = get_spark("scale-sweep", shuffle_partitions=256)
     cpus = spark.sparkContext.defaultParallelism
     out = fixture_dir(spark, args.mult)
 

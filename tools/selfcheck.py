@@ -116,20 +116,6 @@ def summarize(results: dict[str, dict]) -> dict:
     return counts
 
 
-def family_counts(results: dict[str, dict]) -> dict[str, dict]:
-    """Per-family ok/rows_only/fail counts, keyed by the key's prefix
-    (text before the first underscore).  VERDICT r5 #7: the driver has
-    only ever sampled the fn_*/llm_* families, so a regression in a
-    never-driver-checked family (pq, graph, stats, ml, dsv2, ...) must be
-    visible at a glance in the selfcheck summary, not buried in 364 rows."""
-    fams: dict[str, dict] = {}
-    for name, r in sorted(results.items()):
-        fam = name.split("_", 1)[0]
-        c = fams.setdefault(fam, {"ok": 0, "rows_only": 0, "fail": 0})
-        c[r["status"]] += 1
-    return fams
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*", help="query keys (default: all)")
@@ -140,18 +126,13 @@ def main() -> int:
     spark = get_spark("selfcheck")
     results = run_selfcheck(spark, sf=args.sf, names=args.names or None)
     c = summarize(results)
-    fams = family_counts(results)
     print(f"\n{c['ok']} ok, {c['rows_only']} rows-only, {c['fail']} FAIL of {len(results)}")
-    bad = {f: v for f, v in fams.items() if v["fail"]}
-    if bad:
-        print(f"families with failures: {bad}")
     if args.report:
         with open(args.report, "w") as fh:
             json.dump(
                 {
                     "sf": args.sf,
                     "summary": c,
-                    "families": fams,
                     "results": results,
                 },
                 fh,
